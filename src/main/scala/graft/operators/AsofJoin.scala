@@ -35,9 +35,7 @@ object AsofJoin {
                     ts: String, rightCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnInternals
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
+    graft.plans.AsofJoinStrategy.install(spark)
 
     val payload =
       if (rightCols.nonEmpty) rightCols

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnInternals
 import org.apache.spark.sql.types._
 
 /** Window (interval) join: for each left row, aggregate the right rows
@@ -63,12 +68,16 @@ object WindowJoin {
         // __wjhit distinguishes a real match (whose payload may be null)
         // from a miss; among right rows tied on ts the asof tie rule
         // (last in table order) picks the one the reference's
-        // indexr_bin lands on.
+        // indexr_bin lands on. The as-of window groups null keys
+        // together, so left rows with a null key stay out of it: a null
+        // key matches nothing, as in the equi-join above.
         val rightPlus = right.withColumn("__wjhit", lit(1L))
         val payload =
           right.columns.filterNot(keys.contains).toSeq :+ "__wjhit"
-        val asofLeft = l.select(
-          lIds.map(col) ++ keys.map(k => col(s"l_$k").as(k)) :+ lo.as(ts): _*)
+        val asofLeft = l
+          .filter(keys.map(k => col(s"l_$k").isNotNull).reduce(_ && _))
+          .select(lIds.map(col) ++ keys.map(k => col(s"l_$k").as(k)) :+
+            lo.as(ts): _*)
         val prev = AsofJoin.asofJoin(asofLeft, rightPlus, keys, ts, payload)
           .filter(col("__wjhit").isNotNull)
         val common = (lIds ++ keys ++
@@ -86,9 +95,18 @@ object WindowJoin {
       .drop(leftId.map(c => s"l_$c"): _*)
   }
 
-  /** One supported sliding aggregate: op ∈ min|max|sum|count over a
-    * numeric right column (LongType or DoubleType). */
+  /** One supported sliding aggregate: op ∈ min|max|sum|count. min, max
+    * and sum read a numeric right column (LongType, IntegerType or
+    * DoubleType); count counts window rows and reads no column. */
   final case class Agg(op: String, col: String, as: String)
+
+  /** Whether the sliding kernel computes `op` over a right column of
+    * type `t`; the generic [[windowJoin]] takes every other aggregate. */
+  def slidingSupports(op: String, t: DataType): Boolean = op match {
+    case "count" => true
+    case "min" | "max" | "sum" => t == LongType || t == IntegerType || t == DoubleType
+    case _ => false
+  }
 
   /** SLIDING window join — the reference's own algorithm
     * (`aggr_map_window`, `/root/reference/core/aggr.c:331-373`): per key,
@@ -99,12 +117,23 @@ object WindowJoin {
     * windows are wide relative to event spacing (the reference's 1e7
     * window-join benchmark has ~10k quotes per window: 1e11 pairs).
     *
-    * Scale shape: cogroup shuffles each side once on the keys; a hot key
-    * is processed by one task, but linearly — same contract as the
-    * reference's per-key kernel. jtype 1 (`window-join1`, the default)
-    * aggregates inclusive `[lo, hi]`; jtype 0 (`window-join`) adds the
-    * prevailing row — the last right row with ts <= lo
+    * Scale shape: one merge exec (`plans.WindowJoinExec`) whose children
+    * are clustered on the keys and sorted by (keys, ts), so the planner
+    * shuffles and sorts each side once — or not at all when a side is
+    * already bucketed that way. A partition is read in one pass over
+    * `InternalRow`s: one key's right rows are held as primitive columns
+    * while that key's left rows stream through the kernel. A hot key is
+    * processed by one task, linearly — the reference's per-key contract.
+    * Building the DataFrame starts no job. jtype 1 (`window-join1`, the
+    * default) aggregates inclusive `[lo, hi]`; jtype 0 (`window-join`)
+    * adds the prevailing row — the last right row with ts <= lo
     * (`core/aggr.c:143-151`).
+    *
+    * Keys match by typed equality, as in [[windowJoin]]: where the two
+    * sides' types of a key differ, both are cast to their wider common
+    * type (string when there is none). A left row with a null key matches
+    * nothing and gets null aggregates; right rows with a null key are
+    * ignored. A null ts on either side throws `IllegalArgumentException`.
     */
   def windowJoinSliding(left: DataFrame, right: DataFrame,
                         keys: Seq[String], ts: String,
@@ -119,226 +148,232 @@ object WindowJoin {
       require(Seq(LongType, IntegerType).contains(df.schema(ts).dataType),
         s"windowJoinSliding needs an integral $side ts column, got " +
           s"${df.schema(ts).dataType}")
+    for (a <- aggs)
+      require(slidingSupports(a.op, right.schema(a.col).dataType),
+        s"windowJoinSliding cannot compute ${a.op} over ${a.col}: " +
+          s"${right.schema(a.col).dataType}")
     val spark = left.sparkSession
-    val leftCols = left.columns.toSeq
-    val aggFields = aggs.map { a =>
+    graft.plans.AsofJoinStrategy.install(spark)
+
+    val keyTypes = keys.map { k =>
+      val (lt, rt) = (left.schema(k).dataType, right.schema(k).dataType)
+      if (lt == rt) lt
+      else TypeCoercion.findWiderTypeForTwo(lt, rt).getOrElse(StringType)
+    }
+    // a left key whose type is not the common one joins through a cast
+    // copy, so the left columns themselves come out unchanged
+    val lKeys = keys.indices.map(i =>
+      if (left.schema(keys(i)).dataType == keyTypes(i)) keys(i) else s"__lk$i")
+    val lPre = keys.indices.filter(i => lKeys(i) != keys(i)).foldLeft(left)(
+      (df, i) => df.withColumn(lKeys(i), col(keys(i)).cast(keyTypes(i))))
+    // every right column is aliased (fresh exprIds): a custom binary node
+    // gets no DeduplicateRelations, so a self-join would otherwise carry
+    // the same attribute ids on both children
+    val values = aggs.filter(_.op != "count").map(_.col).distinct
+    val rPre = right.select(
+      keys.indices.map(i => col(keys(i)).cast(keyTypes(i)).as(s"__rk$i")) ++
+        (col(ts).cast("long").as("__rts") +:
+          values.indices.map(j => col(values(j)).as(s"__rv$j"))): _*)
+
+    val lPlan = ColumnInternals.analyzed(lPre)
+    val rPlan = ColumnInternals.analyzed(rPre)
+    def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).getOrElse(
+      throw new IllegalArgumentException(s"missing column $n"))
+    val aggOutput = aggs.map { a =>
       val src = right.schema(a.col).dataType
       val t = a.op match {
         case "count" => LongType
         case "sum" => if (src == DoubleType) DoubleType else LongType
         case _ => src
       }
-      StructField(a.as, t, nullable = true)
+      AttributeReference(a.as, t, nullable = true)()
     }
-    val outSchema = StructType(left.schema.fields.map(_.copy()) ++ aggFields)
-    val outEnc = Encoders.row(outSchema)
-
-    // single composite string key for the cogroup (unit separator
-    // avoids accidental key collisions like ("a","bc") vs ("ab","c"))
-    val sep = "\u001f"
-    val lKeyed = left.withColumn("__k",
-      concat_ws(sep, keys.map(c => col(c).cast("string")): _*))
-    val rKeyed = right.withColumn("__k",
-      concat_ws(sep, keys.map(c => col(c).cast("string")): _*))
-    val rSlim = rKeyed.select(col("__k"), col(ts).cast("long").as("__ts"),
-      struct(aggs.map(_.col).distinct.map(col): _*).as("__v"))
-
-    import spark.implicits._
-    val lGrouped = lKeyed.groupByKey(r => r.getAs[String]("__k"))(Encoders.STRING)
-    val rGrouped = rSlim.groupByKey(r => r.getAs[String]("__k"))(Encoders.STRING)
-    val tsIdx = lKeyed.columns.indexOf(ts)
-    val kIdx = lKeyed.columns.indexOf("__k")
-    val aggB = aggs.toArray
-    val jt = jtype
-    // static per-agg layout: struct field index + whether a sum is double
-    val structCols = aggs.map(_.col).distinct
-    val fieldOf = aggs.map(a => structCols.indexOf(a.col)).toArray
-    val isDouble = aggs.map(a =>
-      right.schema(a.col).dataType == DoubleType).toArray
-    val colKinds = structCols.map(c => right.schema(c).dataType match {
-      case DoubleType => 2
-      case IntegerType => 1
-      case _ => 0 // LongType
-    }).toArray
-
-    // cogroupSorted hands each side's iterator already ts-sorted (Spark
-    // sorts within the shuffle, not in task memory), so the LEFT side
-    // STREAMS through the two-pointer kernel — a hot key with 1e8 left
-    // rows never materializes in the task (SkewSpec pins this with a
-    // single-key 1e6 input). Only the right side buffers, which is the
-    // algorithm's contract (the deques need indexed lookback) — and it
-    // buffers COLUMNAR PRIMITIVES, not Row objects: each right Row is
-    // dropped as soon as its fields are extracted, so a 2e7-quote hot
-    // key holds ~9 bytes/column/row instead of a boxed GenericRow
-    // (the 1e7 benchmark's GC variance came from the Row buffer).
-    val joined = lGrouped.cogroupSorted(rGrouped)(col(ts).asc)(col("__ts").asc) {
-      (_, lIt, rIt) =>
-        val tsB = new scala.collection.mutable.ArrayBuilder.ofLong
-        val nF = structCols.length
-        val colBs = Array.tabulate(nF)(i => ColVec.builder(colKinds(i)))
-        rIt.foreach { r =>
-          tsB += r.getLong(1)
-          val st = r.getStruct(2)
-          var i = 0
-          while (i < nF) { colBs(i).add(st, i); i += 1 }
-        }
-        SlidingWindow.run(lIt, tsB.result(), colBs.map(_.result()),
-          tsIdx, kIdx, loOffset, hiOffset, jt, aggB, fieldOf, isDouble)
-    }(outEnc)
-    joined
-  }
-
-  private[operators] def anyToLong(x: Any): Long = x match {
-    case l: java.lang.Long => l
-    case i: java.lang.Integer => i.toLong
-    case t: java.sql.Timestamp => t.getTime
-    case x => throw new IllegalArgumentException(s"unsupported ts $x")
+    val node = graft.plans.WindowJoinNode(lPlan, rPlan,
+      lKeys.map(attr(lPlan, _)), keys.indices.map(i => attr(rPlan, s"__rk$i")),
+      attr(lPlan, ts), attr(rPlan, "__rts"),
+      values.indices.map(j => attr(rPlan, s"__rv$j")),
+      aggs.map(a => graft.plans.SlidingAgg(a.op, values.indexOf(a.col))),
+      aggOutput, loOffset, hiOffset, jtype)
+    val joined = ColumnInternals.ofRows(spark, node)
+    if (lPre eq left) joined
+    else joined.select((left.columns.toSeq ++ aggs.map(_.as)).map(col): _*)
   }
 }
 
-/** Columnar primitive buffer for ONE right-side agg source column:
-  * kind 0 = long, 1 = int (carried as long, boxed back to Integer on
-  * output), 2 = double. Nulls ride a parallel boolean array. */
-private[operators] final class ColVec(val kind: Int, val ls: Array[Long],
-                                      val ds: Array[Double],
-                                      val nulls: Array[Boolean]) {
+/** Growable primitive column of ONE right-side value column for the
+  * current key: kind 0 = long, 1 = int (carried as long), 2 = double.
+  * Nulls ride a parallel boolean array. A hot key of 2e7 quotes holds
+  * ~9 bytes/column/row here instead of a boxed row. */
+private[graft] final class ColVec(val kind: Int) {
+  private var ls = new Array[Long](if (kind == 2) 0 else 16)
+  private var ds = new Array[Double](if (kind == 2) 16 else 0)
+  private var nulls = new Array[Boolean](16)
+  private var size = 0
+
+  def clear(): Unit = size = 0
+
+  def add(row: InternalRow, ordinal: Int): Unit = {
+    if (size == nulls.length) {
+      val cap = size * 2
+      nulls = java.util.Arrays.copyOf(nulls, cap)
+      if (kind == 2) ds = java.util.Arrays.copyOf(ds, cap)
+      else ls = java.util.Arrays.copyOf(ls, cap)
+    }
+    val isNull = row.isNullAt(ordinal)
+    nulls(size) = isNull
+    if (!isNull) kind match {
+      case 2 => ds(size) = row.getDouble(ordinal)
+      case 1 => ls(size) = row.getInt(ordinal)
+      case _ => ls(size) = row.getLong(ordinal)
+    }
+    size += 1
+  }
+
   def isNull(i: Int): Boolean = nulls(i)
-  def numL(i: Int): Long = if (kind == 2) ds(i).toLong else ls(i)
-  def numD(i: Int): Double = if (kind == 2) ds(i) else ls(i).toDouble
+  def long(i: Int): Long = ls(i)
+  def double(i: Int): Double = ds(i)
   def cmp(a: Int, b: Int): Int =
     if (kind == 2) java.lang.Double.compare(ds(a), ds(b))
     else java.lang.Long.compare(ls(a), ls(b))
-  def boxed(i: Int): Any =
-    if (nulls(i)) null
-    else if (kind == 2) java.lang.Double.valueOf(ds(i))
-    else if (kind == 1) java.lang.Integer.valueOf(ls(i).toInt)
-    else java.lang.Long.valueOf(ls(i))
-}
 
-private[operators] object ColVec {
-  final class Builder(kind: Int) {
-    private val lB = if (kind != 2) new scala.collection.mutable.ArrayBuilder.ofLong else null
-    private val dB = if (kind == 2) new scala.collection.mutable.ArrayBuilder.ofDouble else null
-    private val nB = new scala.collection.mutable.ArrayBuilder.ofBoolean
-    def add(st: Row, field: Int): Unit =
-      if (st.isNullAt(field)) {
-        nB += true
-        if (kind == 2) dB += 0.0 else lB += 0L
-      } else {
-        nB += false
-        kind match {
-          case 2 => dB += st.getDouble(field)
-          case 1 => lB += st.getInt(field).toLong
-          case _ => lB += st.getLong(field)
-        }
-      }
-    def result(): ColVec = new ColVec(kind,
-      if (kind != 2) lB.result() else null,
-      if (kind == 2) dB.result() else null, nB.result())
+  /** Writes value `i` into field `o` of `out`, in the column's own type. */
+  def write(out: InternalRow, o: Int, i: Int): Unit = kind match {
+    case 2 => out.setDouble(o, ds(i))
+    case 1 => out.setInt(o, ls(i).toInt)
+    case _ => out.setLong(o, ls(i))
   }
-  def builder(kind: Int): Builder = new Builder(kind)
 }
 
-/** The per-key two-pointer sliding aggregation. min/max use monotonic
-  * deques (amortized O(1) per step); sum/count are incremental. */
-private[operators] object SlidingWindow {
-  import WindowJoin.Agg
+/** Deque of right-row indices over a growable int array. */
+private final class IntDeque {
+  private var xs = new Array[Int](16)
+  private var head = 0
+  private var tail = 0
+  def clear(): Unit = { head = 0; tail = 0 }
+  def isEmpty: Boolean = head == tail
+  def first: Int = xs(head)
+  def last: Int = xs(tail - 1)
+  def addLast(i: Int): Unit = {
+    if (tail == xs.length) xs = java.util.Arrays.copyOf(xs, tail * 2)
+    xs(tail) = i; tail += 1
+  }
+  def pollFirst(): Unit = head += 1
+  def pollLast(): Unit = tail -= 1
+}
 
-  def run(ls: Iterator[Row], rTs: Array[Long], rCols: Array[ColVec],
-          tsIdx: Int, kIdx: Int, lo: Long, hi: Long, jtype: Int,
-          aggs: Array[Agg], fieldOf: Array[Int],
-          isDouble: Array[Boolean]): Iterator[Row] = {
-    val nR = rTs.length
-    // per-agg state
-    val deques = aggs.map(_ => new java.util.ArrayDeque[Int]())
-    val sumL = new Array[Long](aggs.length)
-    val sumD = new Array[Double](aggs.length)
-    var from = 0 // first right idx inside the window
-    var to = 0   // first right idx beyond the window
+/** The per-key two-pointer sliding aggregation over ONE key's right
+  * rows, held as primitive columns. min/max use monotonic deques
+  * (amortized O(1) per step); sum/count are incremental. The right rows
+  * of a key are added in ts order, then [[slide]] is called with that
+  * key's left ts in ascending order.
+  *
+  * @param ops     per aggregate: 0 = min, 1 = max, 2 = sum, 3 = count
+  * @param valueOf per aggregate: index of its value column, -1 for count
+  * @param kinds   per value column: its [[ColVec]] kind
+  */
+private[graft] final class SlidingWindow(ops: Array[Int], valueOf: Array[Int],
+                                         kinds: Array[Int], lo: Long, hi: Long,
+                                         jtype: Int) {
+  private var ts = new Array[Long](16)
+  private var n = 0
+  private val cols = kinds.map(new ColVec(_))
+  private val deques = ops.map(_ => new IntDeque)
+  private val sumL = new Array[Long](ops.length)
+  private val sumD = new Array[Double](ops.length)
+  private var from = 0 // first right idx inside the window
+  private var to = 0   // first right idx beyond the window
 
-    def numL(ri: Int, ai: Int): Long = rCols(fieldOf(ai)).numL(ri)
-    def numD(ri: Int, ai: Int): Double = rCols(fieldOf(ai)).numD(ri)
-    def cmp(a: Int, b: Int, ai: Int, isMin: Boolean): Boolean = {
-      // deque keeps candidates: drop tail while new elem is better-or-equal
-      val c = rCols(fieldOf(ai)).cmp(a, b)
-      if (isMin) c <= 0 else c >= 0
+  /** Forgets the current key's rows and window. */
+  def clear(): Unit = {
+    n = 0; from = 0; to = 0
+    cols.foreach(_.clear())
+    deques.foreach(_.clear())
+    java.util.Arrays.fill(sumL, 0L)
+    java.util.Arrays.fill(sumD, 0.0)
+  }
+
+  /** Appends one right row: its ts and its value columns at `ordinals`. */
+  def add(t: Long, row: InternalRow, ordinals: Array[Int]): Unit = {
+    if (n == ts.length) ts = java.util.Arrays.copyOf(ts, n * 2)
+    ts(n) = t
+    n += 1
+    var c = 0
+    while (c < cols.length) { cols(c).add(row, ordinals(c)); c += 1 }
+  }
+
+  /** Moves the window to the left row at `t`. */
+  def slide(t: Long): Unit = {
+    val wLo = t + lo
+    val wHi = t + hi
+    // advance `to`: add rows entering the window (null values are
+    // skipped for min/max/sum — null-skipping aggregation; count
+    // counts every window row, the reference's unconditional count)
+    while (to < n && ts(to) <= wHi) {
+      var ai = 0
+      while (ai < ops.length) {
+        val op = ops(ai)
+        if (op != 3) {
+          val c = cols(valueOf(ai))
+          if (!c.isNull(to)) op match {
+            case 2 =>
+              if (c.kind == 2) sumD(ai) += c.double(to) else sumL(ai) += c.long(to)
+            case _ =>
+              // drop the tail while the new value is better-or-equal
+              val dq = deques(ai)
+              while (!dq.isEmpty && {
+                val d = c.cmp(to, dq.last); if (op == 0) d <= 0 else d >= 0
+              }) dq.pollLast()
+              dq.addLast(to)
+          }
+        }
+        ai += 1
+      }
+      to += 1
     }
+    // advance `from`: drop rows leaving the window. jtype 1 keeps
+    // rows with ts >= lo; jtype 0 additionally keeps the PREVAILING
+    // row — the last row with ts <= lo (it is dropped only when a
+    // later row is still at-or-before lo), mirroring the reference's
+    // li = indexr_bin(lo) lower index (core/aggr.c:143-151).
+    while (from < to &&
+        (if (jtype == 0) from + 1 < to && ts(from + 1) <= wLo
+         else ts(from) < wLo)) {
+      var ai = 0
+      while (ai < ops.length) {
+        val op = ops(ai)
+        if (op != 3) {
+          val c = cols(valueOf(ai))
+          if (!c.isNull(from)) op match {
+            case 2 =>
+              if (c.kind == 2) sumD(ai) -= c.double(from) else sumL(ai) -= c.long(from)
+            case _ =>
+              val dq = deques(ai)
+              if (!dq.isEmpty && dq.first == from) dq.pollFirst()
+          }
+        }
+        ai += 1
+      }
+      from += 1
+    }
+  }
 
-    ls.map { l =>
-      val ts = WindowJoin.anyToLong(l.get(tsIdx))
-      val wLo = ts + lo
-      val wHi = ts + hi
-      // advance `to`: add rows entering the window (null values are
-      // skipped for min/max/sum — null-skipping aggregation; count
-      // counts every window row, the reference's unconditional count)
-      while (to < nR && rTs(to) <= wHi) {
-        var ai = 0
-        while (ai < aggs.length) {
-          val isNull = aggs(ai).op != "count" &&
-            rCols(fieldOf(ai)).isNull(to)
-          aggs(ai).op match {
-            case _ if isNull => ()
-            case "min" =>
-              val dq = deques(ai)
-              while (!dq.isEmpty && cmp(to, dq.peekLast, ai, isMin = true))
-                dq.pollLast()
-              dq.addLast(to)
-            case "max" =>
-              val dq = deques(ai)
-              while (!dq.isEmpty && cmp(to, dq.peekLast, ai, isMin = false))
-                dq.pollLast()
-              dq.addLast(to)
-            case "sum" => sumL(ai) += numL(to, ai); sumD(ai) += numD(to, ai)
-            case "count" => sumL(ai) += 1
-          }
-          ai += 1
-        }
-        to += 1
+  /** Writes the window's aggregates into fields 0.. of `out`: all null
+    * for an empty window, min/max null when every value in it is null. */
+  def write(out: InternalRow): Unit = {
+    var ai = 0
+    while (ai < ops.length) {
+      if (from >= to) out.setNullAt(ai)
+      else ops(ai) match {
+        case 3 => out.setLong(ai, to - from)
+        case 2 =>
+          if (cols(valueOf(ai)).kind == 2) out.setDouble(ai, sumD(ai))
+          else out.setLong(ai, sumL(ai))
+        case _ =>
+          val dq = deques(ai)
+          if (dq.isEmpty) out.setNullAt(ai)
+          else cols(valueOf(ai)).write(out, ai, dq.first)
       }
-      // advance `from`: drop rows leaving the window. jtype 1 keeps
-      // rows with ts >= lo; jtype 0 additionally keeps the PREVAILING
-      // row — the last row with ts <= lo (it is dropped only when a
-      // later row is still at-or-before lo), mirroring the reference's
-      // li = indexr_bin(lo) lower index (core/aggr.c:143-151).
-      while (from < to &&
-          (if (jtype == 0) from + 1 < to && rTs(from + 1) <= wLo
-           else rTs(from) < wLo)) {
-        var ai = 0
-        while (ai < aggs.length) {
-          val isNull = aggs(ai).op != "count" &&
-            rCols(fieldOf(ai)).isNull(from)
-          aggs(ai).op match {
-            case _ if isNull => ()
-            case "min" | "max" =>
-              val dq = deques(ai)
-              if (!dq.isEmpty && dq.peekFirst == from) dq.pollFirst()
-            case "sum" => sumL(ai) -= numL(from, ai); sumD(ai) -= numD(from, ai)
-            case "count" => sumL(ai) -= 1
-          }
-          ai += 1
-        }
-        from += 1
-      }
-      val empty = from >= to
-      val aggVals: Seq[Any] = aggs.zipWithIndex.map { case (a, ai) =>
-        if (empty) null
-        else a.op match {
-          case "count" => sumL(ai)
-          // box explicitly: `if (c) double else long` would widen the
-          // Long branch to Double (Scala weak conformance)
-          case "sum" =>
-            if (isDouble(ai)) java.lang.Double.valueOf(sumD(ai))
-            else java.lang.Long.valueOf(sumL(ai))
-          case "min" | "max" =>
-            // deque may be empty if every window value was null
-            if (deques(ai).isEmpty) null
-            else rCols(fieldOf(ai)).boxed(deques(ai).peekFirst)
-        }
-      }
-      // drop the composite key column from the left row
-      val base = l.toSeq.zipWithIndex.collect {
-        case (v, i) if i != kIdx => v }
-      Row.fromSeq(base ++ aggVals)
+      ai += 1
     }
   }
 }

@@ -37,12 +37,23 @@ case class AsofJoinNode(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
+/** Plans the engine's merge operators: the as-of join and the sliding
+  * window join ([[WindowJoinNode]]). */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinNode(l, r, lk, rk, lt, rt, tie, p) =>
       AsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tie, p) :: Nil
+    case WindowJoinNode(l, r, lk, rk, lt, rt, vs, as, ao, lo, hi, jt) =>
+      WindowJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, vs, as, ao,
+        lo, hi, jt) :: Nil
     case _ => Nil
   }
+
+  /** Adds this strategy to `spark`'s planner, once. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(this))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ this
 }
 
 case class AsofJoinExec(left: SparkPlan, right: SparkPlan,

@@ -2742,8 +2742,12 @@ object Rayfall {
         val integralTs = Seq(left, right).forall(df =>
           df.schema(ks.last).dataType == org.apache.spark.sql.types.LongType ||
             df.schema(ks.last).dataType == org.apache.spark.sql.types.IntegerType)
+        // value types the kernel does not read go the generic way too
+        val slidingTypes = slidingAggs.flatten.forall(a =>
+          right.schema.find(_.name == a.col).exists(f =>
+            graft.operators.WindowJoin.slidingSupports(a.op, f.dataType)))
         val df =
-          if (slidingAggs.forall(_.isDefined) && integralTs)
+          if (slidingAggs.forall(_.isDefined) && integralTs && slidingTypes)
             graft.operators.WindowJoin.windowJoinSliding(
               left, right, ks.init, ks.last, lo, hi,
               slidingAggs.flatten, jtype = if (wj == "window-join") 0 else 1)

@@ -1120,6 +1120,12 @@ class LangSpec extends SparkSpec {
       "(window-join1 [Sym Time] intervals trades quotes {minBid: (min Bid)})")
     assert(wj1.orderBy("Time").collect().map(_.getLong(3)).toSeq ==
       Seq(99L, 101L))
+    // a value type the sliding kernel does not read (min over a string)
+    // takes the generic range join
+    val strMin = Rayfall.script(spark, pre + "(window-join1 [Sym Time] " +
+      "intervals trades quotes {s: (min Sym) n: (count Bid)})")
+    assert(strMin.orderBy("Time").collect()
+      .map(r => (r.getString(3), r.getLong(4))).toSeq == Seq(("a", 2L), ("a", 1L)))
     // enum-typed key columns resolve to their symbol values
     val en = Rayfall.script(spark,
       "(set sym ['a 'b])" +

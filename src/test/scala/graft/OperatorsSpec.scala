@@ -335,8 +335,19 @@ class OperatorsSpec extends SparkSpec {
       (if (rnd.nextBoolean()) "a" else "b", rnd.nextInt(1000).toLong,
         rnd.nextInt(100).toLong, rnd.nextDouble()))
       .toDF("k", "ts", "v", "d")
-    for (jt <- Seq(1, 0)) {
-      val generic = WindowJoin.windowJoin(l, r, Seq("id"), Seq("k"), "ts",
+    // two keys drawn from {"a", "x", null}: a left ("x", null) must not
+    // meet a right (null, "x"), and a null key matches nothing
+    def key() = Seq(Some("a"), Some("x"), None)(rnd.nextInt(3))
+    val l2 = (0 until 300).map(i =>
+      (i.toLong, key(), key(), rnd.nextInt(1000).toLong))
+      .toDF("id", "k", "k2", "ts")
+    val r2 = (0 until 500).map(_ =>
+      (key(), key(), rnd.nextInt(1000).toLong, rnd.nextInt(100).toLong,
+        rnd.nextDouble()))
+      .toDF("k", "k2", "ts", "v", "d")
+    for ((l, r, keys) <- Seq((l, r, Seq("k")), (l2, r2, Seq("k", "k2")));
+         jt <- Seq(1, 0)) {
+      val generic = WindowJoin.windowJoin(l, r, Seq("id"), keys, "ts",
         lit(-50L), lit(50L),
         Seq(min($"v").as("mn"), max($"v").as("mx"),
           sum($"v").as("sv"), count($"v").as("n"),
@@ -344,7 +355,7 @@ class OperatorsSpec extends SparkSpec {
         jtype = jt)
         .select($"id", $"mn", $"mx", expr("CAST(sv AS LONG) AS sv"), $"n", $"sd")
         .orderBy($"id").collect()
-      val sliding = WindowJoin.windowJoinSliding(l, r, Seq("k"), "ts",
+      val sliding = WindowJoin.windowJoinSliding(l, r, keys, "ts",
         -50L, 50L,
         Seq(WindowJoin.Agg("min", "v", "mn"), WindowJoin.Agg("max", "v", "mx"),
           WindowJoin.Agg("sum", "v", "sv"), WindowJoin.Agg("count", "v", "n"),
@@ -354,8 +365,53 @@ class OperatorsSpec extends SparkSpec {
         .orderBy($"id").collect()
       assert(generic.length == sliding.length)
       generic.zip(sliding).foreach { case (g, s) =>
-        assert(g.toSeq == s.toSeq, s"jtype=$jt\n g=$g\n s=$s") }
+        assert(g.toSeq == s.toSeq, s"keys=$keys jtype=$jt\n g=$g\n s=$s") }
     }
+  }
+
+  /** The IllegalArgumentException somewhere in `e`'s cause chain. */
+  private def argumentError(e: Throwable): IllegalArgumentException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case a: IllegalArgumentException => a }
+      .getOrElse(fail(s"no IllegalArgumentException in $e"))
+
+  test("sliding window join throws on a null left ts") {
+    val l = Seq((1L, "a", Some(100L)), (2L, "a", None)).toDF("id", "k", "ts")
+    val r = Seq(("a", 90L, 5L)).toDF("k", "ts", "v")
+    val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r, Seq("k"),
+      "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n"))).collect())
+    assert(argumentError(e).getMessage.contains("null ts in the left input"))
+  }
+
+  test("sliding window join throws on a null right ts, even off every left key") {
+    val l = Seq((1L, "a", 100L)).toDF("id", "k", "ts")
+    val r = Seq(("a", Some(90L), 5L), ("z", None, 6L)).toDF("k", "ts", "v")
+    val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r, Seq("k"),
+      "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n"))).collect())
+    assert(argumentError(e).getMessage.contains("null ts in the right input"))
+  }
+
+  test("sliding window join matches an int key against a long key") {
+    // 20 keys over 4 shuffle partitions: an int and a long hash apart
+    // unless both sides are cast to the common type first
+    val l = (1 to 20).map(i => (i.toLong, i, 100L)).toDF("id", "k", "ts")
+    val r = (1 to 20).map(i => (i.toLong, 95L, i * 10L)).toDF("k", "ts", "v")
+    val got = WindowJoin.windowJoinSliding(l, r, Seq("k"), "ts", -50L, 50L,
+      Seq(WindowJoin.Agg("sum", "v", "sv")))
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq(
+      "id" -> org.apache.spark.sql.types.LongType,
+      "k" -> org.apache.spark.sql.types.IntegerType,
+      "ts" -> org.apache.spark.sql.types.LongType,
+      "sv" -> org.apache.spark.sql.types.LongType))
+    assert(got.orderBy($"id").collect().map(x => x.getInt(1) -> x.getLong(3))
+      .toSeq == (1 to 20).map(i => i -> i * 10L))
+    // the merge exec plans it: one hash exchange per side, on the cast keys
+    val plan = got.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert("""(?m)^\(\d+\) WindowJoin\b""".r.findFirstIn(plan).isDefined,
+      s"merge exec missing from:\n$plan")
+    assert(plan.linesIterator.count(_.trim.startsWith(
+      "Arguments: hashpartitioning")) == 2, plan)
   }
 
   test("sliding window join skips null values; count counts window rows") {

@@ -146,9 +146,10 @@ class PropertySpec extends SparkSpec {
     // independent oracle: the reference's aggregation kernel verbatim
     // (core/aggr.c:39-68,133-158) — li = indexr_bin(lo) (jtype 0) or
     // indexl_bin(lo) (jtype 1), ri = indexr_bin(hi), aggregate li..ri,
-    // null per the kernel's guard conditions
-    def model(rts: Vector[Long], rvs: Vector[Long], lo: Long, hi: Long,
-              jtype: Int): Option[(Long, Long)] = { // (count, min)
+    // null per the kernel's guard conditions; count counts every window
+    // row, min skips null values
+    def model(rts: Vector[Long], rvs: Vector[Option[Long]], lo: Long,
+              hi: Long, jtype: Int): Option[(Long, Option[Long])] = {
       if (rts.isEmpty) return None
       def indexrBin(v: Long) = { // last idx with ts <= v, else 0
         val i = rts.lastIndexWhere(_ <= v); if (i < 0) 0 else i }
@@ -159,35 +160,44 @@ class PropertySpec extends SparkSpec {
       if (rts(li) > hi || (jtype == 1 && rts(ri) < lo)) None
       else {
         val in = (li to ri).map(rvs)
-        Some((in.size.toLong, in.min))
+        Some((in.size.toLong, in.flatten.minOption))
       }
     }
+    // two keys, each sometimes null: a null key matches nothing
+    val key = Gen.zip(Gen.oneOf(Some("a"), Some("b"), None),
+      Gen.oneOf(Some("x"), Some("y"), None))
     val gen = Gen.zip(
-      Gen.listOfN(40, Gen.zip(Gen.oneOf("a", "b"), Gen.chooseNum(0L, 400L))),
-      Gen.listOfN(60, Gen.zip(Gen.oneOf("a", "b"), Gen.chooseNum(0L, 400L),
-        Gen.chooseNum(0L, 99L))))
+      Gen.listOfN(40, Gen.zip(key, Gen.chooseNum(0L, 400L))),
+      Gen.listOfN(60, Gen.zip(key, Gen.chooseNum(0L, 400L),
+        Gen.option(Gen.chooseNum(0L, 99L)))))
     forAll(gen) { case (ls, rs0) =>
       // distinct right ts per key: at equal ts the kernel and the model
       // may pick different physical duplicates as the prevailing row
       val rs = rs0.distinctBy(x => (x._1, x._2))
       whenever(ls.nonEmpty && rs.nonEmpty) {
-        val l = ls.zipWithIndex.map { case ((k, ts), i) => (i.toLong, k, ts) }
-          .toDF("id", "k", "ts")
-        val r = rs.toDF("k", "ts", "v")
-        val byKey = rs.groupBy(_._1).map { case (k, xs) =>
+        val l = ls.zipWithIndex.map { case (((k, k2), ts), i) =>
+          (i.toLong, k, k2, ts) }.toDF("id", "k", "k2", "ts")
+        val r = rs.map { case ((k, k2), ts, v) => (k, k2, ts, v) }
+          .toDF("k", "k2", "ts", "v")
+        val byKey = rs.filter { case ((k, k2), _, _) =>
+          k.isDefined && k2.isDefined }.groupBy(_._1).map { case (k, xs) =>
           val sorted = xs.sortBy(_._2)
           k -> (sorted.map(_._2).toVector, sorted.map(_._3).toVector)
         }
         for (jt <- Seq(0, 1)) {
-          val got = operators.WindowJoin.windowJoinSliding(l, r, Seq("k"),
-            "ts", -25L, 25L,
+          val got = operators.WindowJoin.windowJoinSliding(l, r,
+            Seq("k", "k2"), "ts", -25L, 25L,
             Seq(operators.WindowJoin.Agg("count", "v", "n"),
               operators.WindowJoin.Agg("min", "v", "mn")), jtype = jt)
-            .collect().map(x => (x.getLong(0), (x.getString(1), x.getLong(2)),
-              if (x.isNullAt(3)) None else Some((x.getLong(3), x.getLong(4)))))
-          got.foreach { case (_, (k, ts), res) =>
-            val (rts, rvs) =
-              byKey.getOrElse(k, (Vector.empty[Long], Vector.empty[Long]))
+            .collect().map { x =>
+              val mn = Option(x.getAs[java.lang.Long](5)).map(_.longValue)
+              ((Option(x.getString(1)), Option(x.getString(2))), x.getLong(3),
+                if (x.isNullAt(4)) None else Some((x.getLong(4), mn)))
+            }
+          assert(got.length == ls.length)
+          got.foreach { case (k, ts, res) =>
+            val (rts, rvs) = byKey.getOrElse(k,
+              (Vector.empty[Long], Vector.empty[Option[Long]]))
             val want = model(rts, rvs, ts - 25L, ts + 25L, jt)
             assert(res == want, s"jt=$jt k=$k ts=$ts got=$res want=$want " +
               s"rts=$rts")

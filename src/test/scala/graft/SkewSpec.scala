@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.SparkSpec
+import graft.plans.{SlidingAgg, WindowMerge}
 
 /** Hot-key skew contract of the sliding window join (reference
   * `aggr_map_window`, `/root/reference/core/aggr.c:331-373`): a single
@@ -17,23 +21,27 @@ class SkewSpec extends SparkSpec {
   test("sliding kernel consumes the left iterator lazily (streams, no toArray)") {
     val n = 1000000
     var pulled = 0
-    val ls: Iterator[Row] = new Iterator[Row] {
+    val key = UTF8String.fromString("k")
+    val ls: Iterator[InternalRow] = new Iterator[InternalRow] {
       var i = 0
       def hasNext: Boolean = i < n
-      def next(): Row = { pulled += 1; i += 1; Row(i.toLong - 1, "k") }
+      def next(): InternalRow = { pulled += 1; i += 1; InternalRow(i.toLong - 1, key) }
     }
-    val rTs = Array.tabulate(1000)(i => i.toLong * 10)
-    val rCols = Array(new ColVec(0, rTs.clone(), null,
-      new Array[Boolean](rTs.length)))
-    val out = SlidingWindow.run(ls, rTs, rCols, tsIdx = 0, kIdx = 1,
-      lo = -100L, hi = 0L, jtype = 1,
-      aggs = Array(WindowJoin.Agg("count", "v", "cnt")),
-      fieldOf = Array(0), isDouble = Array(false))
+    val rs = Iterator.tabulate(1000)(i => InternalRow(key, i.toLong * 10))
+    val lTs = AttributeReference("ts", LongType)()
+    val lK = AttributeReference("k", StringType)()
+    val rK = AttributeReference("k", StringType)()
+    val rTs = AttributeReference("ts", LongType)()
+    val merge = WindowMerge(Seq(lTs, lK), Seq(rK, rTs), Seq(lK), Seq(rK),
+      lTs, rTs, values = Nil, aggs = Seq(SlidingAgg("count", -1)),
+      aggOutput = Seq(AttributeReference("cnt", LongType)()),
+      lo = -100L, hi = 0L, jtype = 1)
+    val out = merge(ls, rs)
     // consume ONE output row: a streaming kernel pulls exactly one left
     // row; a materializing kernel would have pulled all 1e6 first
     val first = out.next()
     assert(pulled == 1, s"kernel materialized the left side: pulled=$pulled")
-    assert(first.getLong(1) == 1L) // ts=0, window [-100,0] holds right ts=0
+    assert(first.getLong(2) == 1L) // ts=0, window [-100,0] holds right ts=0
     // and the rest still aggregates correctly
     var rows = 1L
     while (out.hasNext) { out.next(); rows += 1 }
