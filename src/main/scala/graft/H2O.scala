@@ -85,8 +85,8 @@ object H2O {
     spark.conf.set("spark.sql.inMemoryColumnarStorage.batchSize", "10000")
     // typed-load analog of the reference's `(csv [SYMBOL …] path)`: intern
     // the group keys into global dictionaries once (operators.GroupKernel);
-    // Q1-Q6 then run the dense columnar kernel, Q7 (1e7-group product)
-    // falls back to the Catalyst plan.
+    // Q1-Q7 then run the columnar kernel (Q7's 6-key product through its
+    // hashed slot map).
     if (sys.env.getOrElse("SPARK_GRAFT_H2O_KERNEL", "true") == "true") {
       val te = System.nanoTime()
       operators.GroupKernel.encode(t, Seq("id1", "id2", "id3", "id4", "id5", "id6"))
@@ -94,14 +94,14 @@ object H2O {
     }
     val times = if (!sections("groupby")) Seq.empty else {
       spark.conf.set("spark.sql.adaptive.enabled", aqeGroupBy)
-      // the only Catalyst aggregation in this section is Q7 (~n distinct
-      // 6-key groups): its every probe MISSES the 64k first-level fast
-      // hash map before falling to the real map — pure overhead at high
-      // cardinality. Disabling the two-level map halves Q7 (2.5 s →
-      // 1.24 s, beating the reference's 1394 ms); raising capacityBit
-      // instead (20) was 5× WORSE (32 tasks × 1M-slot columnar maps →
-      // 9.6 s of GC). Q1-Q6 run the dense GroupKernel and never touch
-      // this path; restored after the section for the sf0.1 bench mix.
+      // only with SPARK_GRAFT_H2O_KERNEL=false does this section run a
+      // Catalyst aggregation; there Q7 (~n distinct 6-key groups) MISSES
+      // the 64k first-level fast hash map on every probe before falling
+      // to the real map — pure overhead at high cardinality. Disabling
+      // the two-level map halves that Q7 (2.5 s → 1.24 s); raising
+      // capacityBit instead (20) was 5× WORSE (32 tasks × 1M-slot
+      // columnar maps → 9.6 s of GC). With the kernel on, Q1-Q7 never
+      // touch this path; restored after the section for the sf0.1 mix.
       spark.conf.set("spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
       val debugReps = sys.env.contains("SPARK_GRAFT_H2O_DEBUG")
       // steady-state warm-up: the kernel's hot loops (dense accumulate +

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{approx_count_distinct, col, collect_set, 
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-/** Dictionary-encoded dense group-by kernel.
+/** Dictionary-encoded group-by kernel.
   *
   * The reference's group-by benchmark speed (group-by.md Q1 = 60 ms at 1e7)
   * comes from its columnar layout: SYMBOL columns are interned to small
@@ -19,29 +19,46 @@ import org.apache.spark.storage.StorageLevel
   * query (measured: the partial-agg stage alone is 4-10 s of CPU at 1e7),
   * which is the whole 5-7× gap on the sub-second H2O queries.
   *
-  * This kernel re-creates that architecture Spark-natively, scoped to the
-  * case where it wins: every group key is dictionary-encoded (global dict,
-  * built once at load — the analog of the reference's typed
-  * `(csv [SYMBOL …])` load) and the dense key-product fits in an array
-  * (≤ 2^20 cells). Tables are encoded ONCE into one columnar block per
-  * partition (primitive arrays, like operators.WindowJoin's ColVec);
-  * a query is then: one map stage computing per-partition dense partial
-  * aggregates (the map-side combine Spark would do, minus the hash map),
-  * a tree-merge of the small dense arrays, and a driver-side decode of
-  * occupied cells into a local DataFrame. Anything the kernel can't prove
-  * it handles (filters, takes, huge key products, unsupported aggs,
-  * un-encoded tables) returns None and the caller falls back to the
-  * regular Catalyst plan — Q7's 1e7-group product correctly falls back.
+  * This kernel re-creates that architecture Spark-natively: every group
+  * key is dictionary-encoded (global dict, built once at load — the
+  * analog of the reference's typed `(csv [SYMBOL …])` load), so a row's
+  * keys form one mixed-radix composite code. Tables are encoded ONCE into
+  * one columnar block per partition (primitive arrays, like
+  * operators.WindowJoin's ColVec); a query is then one map stage
+  * computing per-partition partial aggregates (the map-side combine Spark
+  * would do, minus the row hashing), a merge of the partials, and a
+  * decode of occupied slots into InternalRows.
+  *
+  * A slot is where a composite code accumulates. When the key product
+  * fits `MaxDense` the code IS the slot (dense arrays over the whole key
+  * space). Past that cap — H2O Q7's six keys, about one group per row —
+  * each task maps its codes to slots 0, 1, 2, … through an
+  * open-addressing [[SlotMap]] sized to the task's row count; its
+  * partials carry only occupied slots plus their codes, split into
+  * chunks by a hash of the code and merged on the executors. Both run the
+  * same accumulate loops; the hashed branch exists only so the arrays
+  * stay O(rows) when the key space is not. Per task it holds at most
+  * 16-24 B per row for the slot map and its codes, plus 8 B per row for
+  * the counts and for each accumulator (the merge task: the same per
+  * occupied slot it receives), besides the 12-16 B per row of pass-1
+  * work arrays both branches use. Anything the kernel can't prove it handles
+  * (takes, unsupported aggs or predicates, a key product whose composite
+  * code overflows a Long, un-encoded tables) returns None and the caller
+  * falls back to the regular Catalyst plan.
   *
   * At 100 TB the same shape holds: global dictionaries exist only for
-  * low-cardinality key columns (broadcast-sized by construction), partials
-  * are O(key-product) per partition regardless of row count, and the merge
-  * traffic is partials × partitions, independent of data size.
+  * low-cardinality key columns (broadcast-sized by construction), dense
+  * partials are O(key-product) per partition regardless of row count,
+  * hashed ones O(partition rows), and the merge traffic is bounded by
+  * partials × occupied slots.
   */
-object GroupKernel {
+// Serializable: task closures call its helpers (SlotMap probe, chunkOf,
+// the accumulate loops); a module serializes as a proxy, not its fields
+object GroupKernel extends Serializable {
 
-  /** Dense key-product cap: above this the partial arrays stop fitting in
-    * cache and the hash-based Spark plan is the right one anyway. */
+  /** Dense key-product cap: up to this a composite code is its own slot;
+    * above it the dense arrays stop fitting in cache, so codes map to
+    * slots through a per-task [[SlotMap]]. */
   val MaxDense: Int = 1 << 20
 
   /** Whether a (key-product, source-partitions) pair may merge on the
@@ -54,19 +71,8 @@ object GroupKernel {
     *  - p·partitions ≤ 2^21 bounds the partials COLLECT (a
     *    1000-executor scan with 100k partitions must not fan GBs of
     *    partials into the driver). */
-  /** Probe toggle (TimeKernel A/B, SPARK_GRAFT_NO_DRIVER_MERGE): route
-    * small-p merges through the executor path instead of the driver
-    * collect. DOCUMENTED NEGATIVE (round 12, post-stage-fusion): even
-    * with the executor path now ONE job (its 1-partition result also
-    * declares SinglePartition, fusing the count into the merge stage),
-    * Q1 measured 72-162 ms vs the driver path's steady 70-76 — the
-    * repartition(1) shuffle's 32 map-output files still cost more than
-    * the extra collect job saves. The driver merge stays. */
-  private[graft] var driverMergeEnabled = true
-
   private[graft] def driverMergeEligible(p: Int, partitions: Int): Boolean =
-    driverMergeEnabled &&
-      p <= (1 << 14) &&
+    p <= (1 << 14) &&
       p.toLong * partitions <= (1L << 12) * 512 &&
       partitions <= 512
 
@@ -270,6 +276,14 @@ object GroupKernel {
   private final val OpMin = 1
   private final val OpMax = 2
 
+  // how decode reads an output primitive off a merged slot
+  private final val ReadCount = 0
+  private final val ReadAvgL = 1
+  private final val ReadAvgD = 2
+  private final val ReadL = 3
+  private final val ReadInt = 4 // min/max of an int column: the source type
+  private final val ReadD = 5
+
   /** Filter predicates the kernel can fuse into the dense pass — the
     * reference's canonical `(select {… where: … by: …})` always runs its
     * filter+group fused (`core/query.c:311-404`). The grammar mirrors the
@@ -432,12 +446,17 @@ object GroupKernel {
     }
   }
 
-  /** Dense per-partition partials: occupancy counts + one slot array per
-    * long/double accumulator. */
+  /** Per-partition partials: occupancy counts + one slot array per
+    * long/double accumulator; a slot is occupied iff its count is > 0.
+    * `codes` is null on the dense branch (slot i of a range starting at
+    * `base` holds composite code base + i) and holds each slot's
+    * composite code on the hashed one. */
   private final case class Partial(
       counts: Array[Long],
       accL: Array[Array[Long]],
-      accD: Array[Array[Double]]) {
+      accD: Array[Array[Double]],
+      codes: Array[Long]) {
+    /** Slot-wise merge of a dense partial over the same code range. */
     def merge(o: Partial, opsL: Array[Int], opsD: Array[Int]): Partial = {
       val p = counts.length
       var i = 0
@@ -466,6 +485,131 @@ object GroupKernel {
       }
       this
     }
+
+    /** The slots `sel`, in order, as a new hashed partial. */
+    def select(sel: Array[Int]): Partial = {
+      def pickL(xs: Array[Long]) = {
+        val out = new Array[Long](sel.length); var i = 0
+        while (i < sel.length) { out(i) = xs(sel(i)); i += 1 }; out
+      }
+      def pickD(xs: Array[Double]) = {
+        val out = new Array[Double](sel.length); var i = 0
+        while (i < sel.length) { out(i) = xs(sel(i)); i += 1 }; out
+      }
+      Partial(pickL(counts), accL.map(pickL), accD.map(pickD), pickL(codes))
+    }
+  }
+
+  /** Composite code → slot (0, 1, 2, … in first-seen order) for key
+    * products past `MaxDense`: linear probing over a power-of-two table
+    * of slot ids kept at most half full for `maxKeys` distinct codes —
+    * 8-16 B per key for the table plus 8 B per key for `codes`. More than
+    * `maxKeys` distinct codes is a caller error (index out of bounds). */
+  private final class SlotMap(maxKeys: Int) {
+    private val bits =
+      64 - java.lang.Long.numberOfLeadingZeros(2L * math.max(maxKeys, 1) - 1)
+    private val mask = (1 << bits) - 1
+    private val shift = 64 - bits
+    private val table = new Array[Int](1 << bits)
+    java.util.Arrays.fill(table, -1)
+    /** slot → composite code */
+    val codes = new Array[Long](maxKeys)
+    private var size = 0
+
+    def slotOf(code: Long): Int = {
+      // multiplicative (Fibonacci) hashing: the top `bits` of code·φ
+      var h = ((code * 0x9E3779B97F4A7C15L) >>> shift).toInt
+      var s = table(h)
+      while (s >= 0 && codes(s) != code) { h = (h + 1) & mask; s = table(h) }
+      if (s < 0) { s = size; table(h) = s; codes(s) = code; size += 1 }
+      s
+    }
+  }
+
+  /** Merge chunk of a composite code on the hashed branch: the murmur3
+    * finalizer, unrelated to SlotMap's multiplicative probe, so the codes
+    * of one chunk still spread over the merge task's own SlotMap. */
+  private def chunkOf(code: Long, nChunks: Int): Int = {
+    var h = code
+    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+    h ^= h >>> 33
+    java.lang.Math.floorMod(h, nChunks.toLong).toInt
+  }
+
+  /** acc(at(i)) ⊕= vs(i) for i < m — vs(idx(i)) when idx is non-null.
+    * Pass 2 of every map task, and the hashed merge of a slice's slots. */
+  private def accumulateL(op: Int, acc: Array[Long], at: Array[Int], m: Int,
+                          vs: Array[Long], idx: Array[Int]): Unit =
+    if (idx == null) op match {
+      case OpSum => var i = 0; while (i < m) { val c = at(i); acc(c) = Math.addExact(acc(c), vs(i)); i += 1 }
+      case OpMin => var i = 0; while (i < m) { val c = at(i); if (vs(i) < acc(c)) acc(c) = vs(i); i += 1 }
+      case OpMax => var i = 0; while (i < m) { val c = at(i); if (vs(i) > acc(c)) acc(c) = vs(i); i += 1 }
+    } else op match {
+      case OpSum => var i = 0; while (i < m) { val c = at(i); acc(c) = Math.addExact(acc(c), vs(idx(i))); i += 1 }
+      case OpMin => var i = 0; while (i < m) { val c = at(i); val v = vs(idx(i)); if (v < acc(c)) acc(c) = v; i += 1 }
+      case OpMax => var i = 0; while (i < m) { val c = at(i); val v = vs(idx(i)); if (v > acc(c)) acc(c) = v; i += 1 }
+    }
+
+  private def accumulateD(op: Int, acc: Array[Double], at: Array[Int], m: Int,
+                          vs: Array[Double], idx: Array[Int]): Unit =
+    if (idx == null) op match {
+      case OpSum => var i = 0; while (i < m) { acc(at(i)) += vs(i); i += 1 }
+      case OpMin => var i = 0; while (i < m) { val c = at(i); if (vs(i) < acc(c)) acc(c) = vs(i); i += 1 }
+      case OpMax => var i = 0; while (i < m) { val c = at(i); if (vs(i) > acc(c)) acc(c) = vs(i); i += 1 }
+    } else op match {
+      case OpSum => var i = 0; while (i < m) { acc(at(i)) += vs(idx(i)); i += 1 }
+      case OpMin => var i = 0; while (i < m) { val c = at(i); val v = vs(idx(i)); if (v < acc(c)) acc(c) = v; i += 1 }
+      case OpMax => var i = 0; while (i < m) { val c = at(i); val v = vs(idx(i)); if (v > acc(c)) acc(c) = v; i += 1 }
+    }
+
+  /** comp(i) = comp(i) · radix + k(i) for i < n: folds one key column
+    * into the rows' mixed-radix composite codes. */
+  private def foldKey(comp: Array[Long], k: Array[Int], radix: Long, n: Int): Unit = {
+    var i = 0
+    while (i < n) { comp(i) = comp(i) * radix + k(i); i += 1 }
+  }
+
+  /** Pass 1 of a block: every row kept by `mask` (all rows when null)
+    * takes its composite code's slot into codes[0..m) and one count. Under
+    * a mask idx[0..m) maps the kept rows back to source positions, so the
+    * value loops stay branch-free over m. Returns m. Dense: the code is
+    * the slot. */
+  private def assignDense(comp: Array[Long], n: Int, mask: Array[Boolean],
+                          codes: Array[Int], idx: Array[Int],
+                          counts: Array[Long]): Int = {
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (mask == null || mask(i)) {
+        val s = comp(i).toInt
+        codes(m) = s; counts(s) += 1
+        if (mask != null) idx(m) = i
+        m += 1
+      }
+      i += 1
+    }
+    m
+  }
+
+  /** [[assignDense]] with the slot a SlotMap probe. A separate loop, not a
+    * branch in one: the JIT compiles the dense loop first (every small key
+    * product runs it) and would deoptimize it on the first hashed row. */
+  private def assignHashed(comp: Array[Long], n: Int, mask: Array[Boolean],
+                           slotMap: SlotMap, codes: Array[Int], idx: Array[Int],
+                           counts: Array[Long]): Int = {
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (mask == null || mask(i)) {
+        val s = slotMap.slotOf(comp(i))
+        codes(m) = s; counts(s) += 1
+        if (mask != null) idx(m) = i
+        m += 1
+      }
+      i += 1
+    }
+    m
   }
 
   /** Try to run `keys`-grouped primitives `prims` (op ∈ sum|avg|min|max|
@@ -480,11 +624,15 @@ object GroupKernel {
     if (enc == null || keys.isEmpty) return None
     if (!keys.forall(enc.dicts.contains)) return None
     val cards = keys.map(enc.dicts(_).length.toLong)
-    val product = cards.foldLeft(1L)((a, b) =>
-      if (a > MaxDense) a else a * b)
-    if (product > MaxDense) return None
-    val p = product.toInt
-    if (p == 0) return None
+    // the key product bounds the mixed-radix composite code: past a Long
+    // the code no longer fits and the Catalyst plan answers
+    val product =
+      try cards.reduce(Math.multiplyExact(_, _))
+      catch { case _: ArithmeticException => return None }
+    if (product == 0) return None
+    // dense: a composite code is its own slot; past MaxDense each task
+    // maps its codes to at most one slot per row through a SlotMap
+    val dense = product <= MaxDense
 
     val supported = prims.forall { case (op, c) =>
       op match {
@@ -529,122 +677,94 @@ object GroupKernel {
     val opsD = slotsD.map(_.op)
     val cardsArr = cards.map(_.toInt).toArray
     val keyArr = keys.toArray
+    val nKeys = keyArr.length
     val colL = slotsL.map(_.col)
     val colD = slotsD.map(_.col)
     val initL = slotsL.map(_.init)
     val initD = slotsD.map(_.initD)
+    // `size` fresh slots: zero counts, accumulators at their identities
+    def emptyPartial(size: Int): Partial = Partial(
+      new Array[Long](size),
+      initL.map { v =>
+        val acc = new Array[Long](size)
+        if (v != 0L) java.util.Arrays.fill(acc, v)
+        acc
+      },
+      initD.map { v =>
+        val acc = new Array[Double](size)
+        if (v != 0.0) java.util.Arrays.fill(acc, v)
+        acc
+      },
+      null)
 
-    val debug = sys.env.contains("SPARK_GRAFT_KERNEL_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (debug) {
-      println(f"[kernel] $tag ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-      t0 = System.nanoTime()
-    }
-    // Large key products make the dense partial arrays the dominant
-    // shipping cost (P=1e5 × 3 accumulators ≈ 2.4 MB per partition): merge
-    // locally first by giving each task several cached blocks (coalesce
-    // keeps locality on a cluster), so fewer, same-sized partials travel.
-    // The fan-in is proportional (×4, floor 8) — a fixed small number
-    // would collapse a big cluster's scan to a handful of tasks.
+    // Large dense products make the partial arrays the dominant shipping
+    // cost (P=1e5 × 3 accumulators ≈ 2.4 MB per partition): merge locally
+    // first by giving each task several cached blocks (coalesce keeps
+    // locality on a cluster), so fewer, same-sized partials travel. The
+    // fan-in is proportional (×4, floor 8) — a fixed small number would
+    // collapse a big cluster's scan to a handful of tasks. Hashed partials
+    // are O(rows), so a coalesce would only serialize their work.
     val src =
-      if (p >= (1 << 14))
+      if (dense && product >= (1 << 14))
         enc.blocks.coalesce(
           math.max(8, enc.blocks.getNumPartitions / 4), shuffle = false)
       else enc.blocks
-    val partials = src.mapPartitions { blocks =>
+    val partials = src.mapPartitions { it =>
+      val blocks = it.toArray
       if (blocks.isEmpty) Iterator.empty
       else {
-        val counts = new Array[Long](p)
-        val accL = Array.tabulate(colL.length) { a =>
-          val acc = new Array[Long](p)
-          if (initL(a) != 0L) java.util.Arrays.fill(acc, initL(a))
-          acc
-        }
-        val accD = Array.tabulate(colD.length) { a =>
-          val acc = new Array[Double](p)
-          if (initD(a) != 0.0) java.util.Arrays.fill(acc, initD(a))
-          acc
-        }
+        // hashed: at most one slot per row of the task
+        val rows = blocks.iterator
+          .map(_(s"#${keyArr(0)}").asInstanceOf[Array[Int]].length.toLong).sum
+        val slotMap = if (dense) null else new SlotMap(math.min(product, rows).toInt)
+        val pt = emptyPartial(if (dense) product.toInt else slotMap.codes.length)
+        val counts = pt.counts
+        var comp: Array[Long] = null
         var codes: Array[Int] = null
         var idx: Array[Int] = null
         blocks.foreach { block =>
-          val keyCodes = keyArr.map(k => block(s"#$k").asInstanceOf[Array[Int]])
-          val n = if (keyCodes.isEmpty) 0 else keyCodes(0).length
-          if (codes == null || codes.length < n) codes = new Array[Int](n)
-          val mask = if (maskF == null) null else maskF(block, n)
-          // pass 1: combined dense codes + occupancy. With a fused filter
-          // the surviving rows compact into codes[0..m) with idx mapping
-          // back to source positions, so the value loops below stay tight
-          // (branch-free over m) instead of re-testing the mask per slot.
-          val k0 = keyCodes(0)
-          var m = 0
-          if (mask == null) {
-            if (keyCodes.length == 1) {
-              var i = 0
-              while (i < n) { val c = k0(i); codes(i) = c; counts(c) += 1; i += 1 }
-            } else {
-              var i = 0
-              while (i < n) {
-                var c = k0(i)
-                var j = 1
-                while (j < keyCodes.length) { c = c * cardsArr(j) + keyCodes(j)(i); j += 1 }
-                codes(i) = c; counts(c) += 1; i += 1
-              }
-            }
-            m = n
-          } else {
-            if (idx == null || idx.length < n) idx = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              if (mask(i)) {
-                var c = k0(i)
-                var j = 1
-                while (j < keyCodes.length) { c = c * cardsArr(j) + keyCodes(j)(i); j += 1 }
-                codes(m) = c; idx(m) = i; counts(c) += 1; m += 1
-              }
-              i += 1
-            }
+          val n = block(s"#${keyArr(0)}").asInstanceOf[Array[Int]].length
+          if (codes == null || codes.length < n) {
+            comp = new Array[Long](n); codes = new Array[Int](n)
           }
+          val mask = if (maskF == null) null else maskF(block, n)
+          if (mask != null && (idx == null || idx.length < n)) idx = new Array[Int](n)
+          // pass 1: composite codes one key column at a time (radix 0 for
+          // the first column overwrites the previous block's codes), then
+          // each kept row's slot plus occupancy — the only step where the
+          // two branches differ
+          var j = 0
+          while (j < nKeys) {
+            foldKey(comp, block(s"#${keyArr(j)}").asInstanceOf[Array[Int]],
+              if (j == 0) 0L else cardsArr(j).toLong, n)
+            j += 1
+          }
+          val m =
+            if (dense) assignDense(comp, n, mask, codes, idx, counts)
+            else assignHashed(comp, n, mask, slotMap, codes, idx, counts)
           // pass 2: one tight loop per accumulator
+          val rowIdx = if (mask == null) null else idx
           var a = 0
           while (a < colL.length) {
-            val acc = accL(a)
-            val vs = block(colL(a)).asInstanceOf[Array[Long]]
-            if (mask == null) opsL(a) match {
-              case OpSum => var i = 0; while (i < m) { val c = codes(i); acc(c) = Math.addExact(acc(c), vs(i)); i += 1 }
-              case OpMin => var i = 0; while (i < m) { val c = codes(i); if (vs(i) < acc(c)) acc(c) = vs(i); i += 1 }
-              case OpMax => var i = 0; while (i < m) { val c = codes(i); if (vs(i) > acc(c)) acc(c) = vs(i); i += 1 }
-            } else opsL(a) match {
-              case OpSum => var i = 0; while (i < m) { val c = codes(i); acc(c) = Math.addExact(acc(c), vs(idx(i))); i += 1 }
-              case OpMin => var i = 0; while (i < m) { val c = codes(i); val v = vs(idx(i)); if (v < acc(c)) acc(c) = v; i += 1 }
-              case OpMax => var i = 0; while (i < m) { val c = codes(i); val v = vs(idx(i)); if (v > acc(c)) acc(c) = v; i += 1 }
-            }
+            accumulateL(opsL(a), pt.accL(a), codes, m,
+              block(colL(a)).asInstanceOf[Array[Long]], rowIdx)
             a += 1
           }
           a = 0
           while (a < colD.length) {
-            val acc = accD(a)
-            val vs = block(colD(a)).asInstanceOf[Array[Double]]
-            if (mask == null) opsD(a) match {
-              case OpSum => var i = 0; while (i < m) { acc(codes(i)) += vs(i); i += 1 }
-              case OpMin => var i = 0; while (i < m) { val c = codes(i); if (vs(i) < acc(c)) acc(c) = vs(i); i += 1 }
-              case OpMax => var i = 0; while (i < m) { val c = codes(i); if (vs(i) > acc(c)) acc(c) = vs(i); i += 1 }
-            } else opsD(a) match {
-              case OpSum => var i = 0; while (i < m) { acc(codes(i)) += vs(idx(i)); i += 1 }
-              case OpMin => var i = 0; while (i < m) { val c = codes(i); val v = vs(idx(i)); if (v < acc(c)) acc(c) = v; i += 1 }
-              case OpMax => var i = 0; while (i < m) { val c = codes(i); val v = vs(idx(i)); if (v > acc(c)) acc(c) = v; i += 1 }
-            }
+            accumulateD(opsD(a), pt.accD(a), codes, m,
+              block(colD(a)).asInstanceOf[Array[Double]], rowIdx)
             a += 1
           }
         }
-        Iterator.single(Partial(counts, accL, accD))
+        Iterator.single(if (dense) pt else pt.copy(codes = slotMap.codes))
       }
     }
-    lap("plan")
 
-    // decode occupied cells into a local DataFrame
+    // decode occupied cells into a local DataFrame; nullability as the
+    // Catalyst plan declares it (keys as in the source, count never null)
     val outFields =
-      keyArr.map(k => StructField(k, enc.keyTypes(k))) ++
+      keyArr.map(k => StructField(k, enc.keyTypes(k), df.schema(k).nullable)) ++
         prims.zipWithIndex.map { case ((op, c), i) =>
           val dt = op match {
             case "count" => LongType
@@ -654,7 +774,7 @@ object GroupKernel {
               if (enc.intSourced(c)) IntegerType
               else if (enc.longCols(c)) LongType else DoubleType
           }
-          StructField(s"__p$i", dt)
+          StructField(s"__p$i", dt, nullable = op != "count")
         }
     val schema = StructType(outFields.toArray)
     // decode dictionaries ride the per-table broadcast (see Encoded) —
@@ -664,65 +784,95 @@ object GroupKernel {
     // the driver, and the caller's action executes the whole thing as ONE
     // job: scan → tiny shuffle → merge + decode + project. Small key
     // products take a 1-partition shuffle (a few KB). Large products
-    // (P ≥ 2^14 — the H2O 1e5-group family) split every partial into
-    // `nChunks` contiguous code ranges and shuffle BY RANGE, so the
-    // merge's fetch + deserialize + dense add + row decode all run
-    // `nChunks`-wide instead of serializing ~partials × P cells through
-    // one task (measured: that single task was the whole Q3/Q5/Q6 gap vs
-    // the reference; the bytes moved are identical, only parallel).
-    val nKeys = keyArr.length
-    val primsArr = prims.toArray
-    val intSrc = enc.intSourced
-    // decode one merged dense range [base, base + counts.length) of the
-    // global code space into output rows (key decode + post-agg slots)
-    def decodeRange(merged: Partial, base: Int)
+    // (P ≥ 2^14 — the H2O 1e5-group family, and every hashed product)
+    // split every partial into `nChunks` chunks — contiguous code ranges
+    // when dense, by a hash of the code when hashed — and shuffle BY
+    // CHUNK, so the merge's fetch + deserialize + add + row decode all
+    // run `nChunks`-wide instead of serializing ~partials × P cells
+    // through one task (measured: that single task was the whole
+    // Q3/Q5/Q6 gap vs the reference; the bytes moved are identical, only
+    // parallel).
+    // where decode reads each output primitive, resolved once here instead
+    // of per slot: (kind, accumulator index)
+    val (primKind, primAcc) = prims.map { case (op, c) =>
+      if (op == "count") (ReadCount, 0)
+      else {
+        val (isL, a) = slotIdx((if (op == "avg") "sum" else op, c))
+        val kind =
+          if (op == "avg") (if (isL) ReadAvgL else ReadAvgD)
+          else if (!isL) ReadD
+          else if (enc.intSourced(c) && op != "sum") ReadInt
+          else ReadL
+        (kind, a)
+      }
+    }.toArray.unzip
+    val nPrims = primKind.length
+    // decode the occupied slots of a merged partial into output rows (key
+    // decode + post-agg slots); a dense slot i holds code base + i
+    def decodeSlots(merged: Partial, base: Long)
         : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
       // executor-side: resolve the broadcast once per range
       val dictsInternal: Array[Array[Any]] = {
         val m = bcDecode.value; keyArr.map(m)
       }
+      // one call per occupied slot: a method the JIT compiles after a few
+      // hundred rows, not a loop body that waits for on-stack replacement
+      def row(i: Int): org.apache.spark.sql.catalyst.InternalRow = {
+        val n = merged.counts(i)
+        val vals = new Array[Any](nKeys + nPrims)
+        var rem = if (merged.codes == null) base + i else merged.codes(i)
+        var j = nKeys - 1
+        while (j >= 0) {
+          vals(j) = dictsInternal(j)((rem % cardsArr(j)).toInt)
+          rem /= cardsArr(j)
+          j -= 1
+        }
+        var q = 0
+        while (q < nPrims) {
+          val a = primAcc(q)
+          vals(nKeys + q) = primKind(q) match {
+            case ReadCount => n
+            case ReadAvgL => merged.accL(a)(i).toDouble / n
+            case ReadAvgD => merged.accD(a)(i) / n
+            case ReadL => merged.accL(a)(i)
+            case ReadInt => merged.accL(a)(i).toInt
+            case ReadD => merged.accD(a)(i)
+          }
+          q += 1
+        }
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+      }
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.catalyst.InternalRow]
-      val len = merged.counts.length
       var i = 0
-      while (i < len) {
-        if (merged.counts(i) > 0) {
-          val vals = new Array[Any](nKeys + primsArr.length)
-          var rem = base + i
-          var j = nKeys - 1
-          while (j >= 0) {
-            vals(j) = dictsInternal(j)(rem % cardsArr(j))
-            rem /= cardsArr(j)
-            j -= 1
-          }
-          var q = 0
-          while (q < primsArr.length) {
-            val (op, c) = primsArr(q)
-            vals(nKeys + q) = op match {
-              case "count" => merged.counts(i)
-              case "avg" =>
-                val (isL, s) = slotIdx(("sum", c))
-                if (isL) merged.accL(s)(i).toDouble / merged.counts(i)
-                else merged.accD(s)(i) / merged.counts(i)
-              case o =>
-                val (isL, s) = slotIdx((o, c))
-                if (isL) {
-                  val v = merged.accL(s)(i)
-                  if (intSrc(c) && (o == "min" || o == "max")) v.toInt else v
-                } else merged.accD(s)(i)
-            }
-            q += 1
-          }
-          rows += new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(vals)
-        }
+      while (i < merged.counts.length) {
+        if (merged.counts(i) > 0) rows += row(i)
         i += 1
       }
       rows.iterator
     }
-    val nChunks = if (p >= (1 << 14)) 8 else 1
+    // hashed merge: the slots of every slice re-map into one SlotMap sized
+    // to the slots received and fold in through pass 2's accumulate loops
+    def mergeHashed(slices: Array[Partial]): Partial = {
+      val into = new SlotMap(slices.iterator.map(_.counts.length).sum)
+      val out = emptyPartial(into.codes.length)
+      slices.foreach { pt =>
+        val k = pt.counts.length
+        val at = new Array[Int](k)
+        var i = 0
+        while (i < k) {
+          val s = into.slotOf(pt.codes(i)); at(i) = s; out.counts(s) += pt.counts(i); i += 1
+        }
+        var a = 0
+        while (a < opsL.length) { accumulateL(opsL(a), out.accL(a), at, k, pt.accL(a), null); a += 1 }
+        a = 0
+        while (a < opsD.length) { accumulateD(opsD(a), out.accD(a), at, k, pt.accD(a), null); a += 1 }
+      }
+      out.copy(codes = into.codes)
+    }
+    val nChunks = if (product >= (1 << 14)) 8 else 1
     val mergedRows =
-      if (GroupKernel.driverMergeEligible(p, src.getNumPartitions)) {
+      if (dense && GroupKernel.driverMergeEligible(product.toInt, src.getNumPartitions)) {
         // p ≤ 2^14 keeps the DECODED result small: the driver path
         // ships result rows in one task closure, and a 1e5-group query
         // sneaking under the product bound (few source partitions)
@@ -746,30 +896,55 @@ object GroupKernel {
         val ps = partials.collect()
         val rows =
           if (ps.isEmpty) Array.empty[org.apache.spark.sql.catalyst.InternalRow]
-          else decodeRange(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0).toArray
+          else decodeSlots(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0).toArray
         df.sparkSession.sparkContext.parallelize(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(rows), 1)
       }
       else if (nChunks == 1)
         partials.repartition(1).mapPartitions { ps =>
           if (ps.isEmpty) Iterator.empty
-          else decodeRange(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0)
+          else decodeSlots(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0)
         }
       else {
-        val chunkSize = (p + nChunks - 1) / nChunks
-        partials.flatMap { pt =>
-          (0 until nChunks).iterator.map { ch =>
+        val chunkSize = if (dense) (product.toInt + nChunks - 1) / nChunks else 0
+        // a partial's slices, one per chunk: dense ones by code range,
+        // hashed ones gather their occupied slots by chunkOf(code)
+        def split(pt: Partial): Iterator[(Int, Partial)] =
+          if (pt.codes == null) (0 until nChunks).iterator.map { ch =>
             val from = ch * chunkSize
-            val until = math.min(p, from + chunkSize)
+            val until = math.min(product.toInt, from + chunkSize)
             ch -> Partial(
               java.util.Arrays.copyOfRange(pt.counts, from, until),
               pt.accL.map(a => java.util.Arrays.copyOfRange(a, from, until)),
-              pt.accD.map(a => java.util.Arrays.copyOfRange(a, from, until)))
+              pt.accD.map(a => java.util.Arrays.copyOfRange(a, from, until)),
+              null)
           }
-        }.partitionBy(new org.apache.spark.HashPartitioner(nChunks))
+          else {
+            val n = pt.counts.length
+            val chunk = new Array[Int](n)
+            val sizes = new Array[Int](nChunks)
+            var i = 0
+            while (i < n) {
+              if (pt.counts(i) > 0) {
+                chunk(i) = chunkOf(pt.codes(i), nChunks); sizes(chunk(i)) += 1
+              } else chunk(i) = -1
+              i += 1
+            }
+            val sel = sizes.map(new Array[Int](_))
+            val filled = new Array[Int](nChunks)
+            i = 0
+            while (i < n) {
+              val ch = chunk(i)
+              if (ch >= 0) { sel(ch)(filled(ch)) = i; filled(ch) += 1 }
+              i += 1
+            }
+            Iterator.tabulate(nChunks)(ch => ch -> pt.select(sel(ch)))
+          }
+        partials.flatMap(split)
+          .partitionBy(new org.apache.spark.HashPartitioner(nChunks))
           .mapPartitions { it =>
             if (it.isEmpty) Iterator.empty
-            else {
+            else if (dense) {
               // one chunk id per partition (ids 0..nChunks-1 hash to
               // themselves); merge its slices, decode its code range
               var ch = -1
@@ -779,8 +954,9 @@ object GroupKernel {
                 merged =
                   if (merged == null) slice else merged.merge(slice, opsL, opsD)
               }
-              decodeRange(merged, ch * chunkSize)
+              decodeSlots(merged, ch.toLong * chunkSize)
             }
+            else decodeSlots(mergeHashed(it.map(_._2).toArray), 0)
           }
       }
     // 1-partition results (driver merge, single-chunk executor merge)
@@ -792,9 +968,7 @@ object GroupKernel {
           .internalDataFrameSingle(df.sparkSession, schema, mergedRows)
       else org.apache.spark.sql.graftshim.ColumnInternals
         .internalDataFrame(df.sparkSession, schema, mergedRows)
-    val out = finish(idf)
-    lap("build")
-    Some(out)
+    Some(finish(idf))
   }
 
   private def opName(op: Int): String = op match {

@@ -4,11 +4,13 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.GroupKernel
 import graft.rayfall.Rayfall
 
-/** The dense dictionary-encoded group-by kernel must be result-identical
-  * to the Catalyst plan it replaces, for every H2O query shape
-  * (`/root/reference/docs/docs/content/get-started/benchmarks/group-by.md:54-60`),
+/** The dictionary-encoded group-by kernel must be result- and
+  * schema-identical to the Catalyst plan it replaces, for every H2O query
+  * shape (the reference's `docs/content/get-started/benchmarks/group-by.md`),
+  * on both its dense and its hashed (key product past `MaxDense`) branch,
   * and must fall back (not fail) on anything it doesn't cover. */
-class GroupKernelSpec extends SparkSpec {
+class GroupKernelSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private lazy val t: DataFrame = {
     val df = H2O.g1(spark, 20000L).cache()
@@ -36,6 +38,9 @@ class GroupKernelSpec extends SparkSpec {
   }
 
   private def assertSame(q: String): Unit = {
+    val kSchema = Rayfall.query(q, Map("t" -> registered)).schema
+    val sSchema = Rayfall.query(q, Map("t" -> plain)).schema
+    assert(kSchema == sSchema, s"schema for $q: $kSchema vs $sSchema")
     val (k, s) = both(q)
     assert(k.length == s.length, s"row count for $q")
     k.zip(s).foreach { case (a, b) =>
@@ -142,11 +147,95 @@ class GroupKernelSpec extends SparkSpec {
     assert(k.length == 1 && k.sameElements(s))
   }
 
-  test("huge key product (Q7 shape) falls back and still answers") {
-    val q = "(select {v3: (sum v3) count: (map count v3) from: t " +
-      "by: {id1: id1 id2: id2 id3: id3 id4: id4 id5: id5 id6: id6}})"
-    val (k, s) = both(q)
-    assert(k.length == s.length && k.nonEmpty)
+  private val sixKeys = Seq("id1", "id2", "id3", "id4", "id5", "id6")
+
+  // past MaxDense the kernel maps composite codes to hashed slots
+  test("Q7 six-key product past MaxDense runs in the kernel and matches Catalyst") {
+    val q = H2O.queries.toMap.apply("Q7")
+    assert(q == "(select {v3: (sum v3) count: (map count v3) from: t " +
+      "by: {id1: id1 id2: id2 id3: id3 id4: id4 id5: id5 id6: id6}})")
+    assertSame(q)
+    val kdf = Rayfall.query(q, Map("t" -> registered))
+    assert(usedKernel(kdf))
+    assert(collect(kdf.queryExecution.executedPlan) {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+    }.isEmpty, "Q7 must not plan a hash aggregate")
+    assert(GroupKernel.tryRun(registered, sixKeys,
+      Seq("sum" -> "v3", "count" -> "v3"), identity).isDefined)
+    assert(kdf.count() > GroupKernel.MaxDense / 100) // ~one group per row
+  }
+
+  test("hashed branch: where-clause with min/max over int columns and avg") {
+    // 100 × 200 × 200 = 4e6 key cells > MaxDense
+    val q = "(select {lo: (min v1) hi: (max v2) a: (avg v3) n: (count v1) " +
+      "from: t where: (> v3 20.0) by: {id1: id1 id3: id3 id6: id6}})"
+    assertSame(q)
+    val kdf = Rayfall.query(q, Map("t" -> registered))
+    assert(usedKernel(kdf), s"expected the kernel route for $q")
+    assert(kdf.schema("lo").dataType == org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("hashed branch: groups spanning partitions merge like Catalyst") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // 1100 × 1000 key cells > MaxDense, but only 11000 groups of 5-6 rows
+    // each, spread over 8 partitions: every group meets in the merge
+    val df = spark.range(0L, 60000L, 1L, 8).select(($"id" % 1100).as("k1"),
+      ($"id" % 1000).cast("int").as("k2"), ($"id" % 7).as("v"),
+      (($"id" * 13) % 101).cast("double").as("d")).cache()
+    df.count()
+    val q = "(select {s: (sum v) lo: (min v) hi: (max d) a: (avg d) " +
+      "n: (count v) from: t by: {k1: k1 k2: k2}})"
+    def rows(d: DataFrame) = d.orderBy("k1", "k2").collect().map(_.toSeq).toSeq
+    val plainRows = rows(Rayfall.query(q, Map("t" -> df)))
+    GroupKernel.encode(df, Seq("k1", "k2"))
+    val kdf = Rayfall.query(q, Map("t" -> df))
+    assert(usedKernel(kdf))
+    assert(rows(kdf) == plainRows && plainRows.size == 11000)
+    GroupKernel.unregister(df)
+    df.unpersist()
+  }
+
+  test("hashed branch: BIGINT sum overflow raises, not a silent wraparound") {
+    import spark.implicits._
+    // 1100 × 1000 key cells > MaxDense; group (0, 0) holds MaxValue and 1
+    val df = (spark.range(1100L).select($"id".as("k1"), ($"id" % 1000).as("k2"),
+      org.apache.spark.sql.functions.when($"id" === 0, Long.MaxValue)
+        .otherwise(1L).as("v")) union Seq((0L, 0L, 1L)).toDF("k1", "k2", "v"))
+      .cache()
+    df.count()
+    GroupKernel.encode(df, Seq("k1", "k2"))
+    val q = "(select {s: (sum v) from: t by: {k1: k1 k2: k2}})"
+    assert(usedKernel(Rayfall.query(q, Map("t" -> df))))
+    val ex = intercept[Exception](Rayfall.query(q, Map("t" -> df)).collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.toLowerCase.contains("overflow")),
+      s"expected an overflow error, got: $ex")
+    GroupKernel.unregister(df)
+    df.unpersist()
+  }
+
+  test("a key product past a Long falls back to Catalyst and stays correct") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // seven keys of 1000 values each: 1e21 key cells > Long.MaxValue
+    val ks = (1 to 7).map(j => s"k$j")
+    val df = spark.range(3000L).select(ks.zipWithIndex.map { case (k, j) =>
+      pmod($"id" * lit(Seq(3, 7, 11, 13, 17, 19, 23)(j)), lit(1000)).as(k)
+    } :+ ($"id" % 5).as("v"): _*).cache()
+    df.count()
+    val q = "(select {s: (sum v) n: (count v) from: t by: {" +
+      ks.map(k => s"$k: $k").mkString(" ") + "}})"
+    def rows(d: DataFrame) = d.orderBy(ks.map(col): _*).collect().map(_.toSeq).toSeq
+    val plainRows = rows(Rayfall.query(q, Map("t" -> df)))
+    GroupKernel.encode(df, ks)
+    assert(GroupKernel.tryRun(df, ks, Seq("sum" -> "v"), identity).isEmpty)
+    val kdf = Rayfall.query(q, Map("t" -> df))
+    assert(!usedKernel(kdf))
+    assert(rows(kdf) == plainRows && plainRows.size == 1000)
+    GroupKernel.unregister(df)
+    df.unpersist()
   }
 
   test("large key product (≥ 2^14) takes the multi-block local-combine " +

@@ -318,24 +318,29 @@ class PropertySpec extends SparkSpec {
   }
 
   test("GroupKernel == Catalyst on random tables, keys, and agg mixes") {
+    // key-3 lets some draws pass MaxDense (2^20 key cells; the seeds below
+    // draw one at 16 × 16 × 7118), so both the dense and the hashed slot
+    // branch of the kernel are exercised
     val tables = Gen.zip(
-      Gen.chooseNum(1, 2000),            // rows
+      Gen.chooseNum(1, 20000),           // rows
       Gen.chooseNum(1, 40),              // key-1 cardinality
       Gen.chooseNum(1, 25),              // key-2 cardinality
+      Gen.chooseNum(1, 1 << 16),         // key-3 cardinality
       Gen.chooseNum(0L, 1L << 40))       // value offset (range stress)
-    forAll(tables) { case (n, c1, c2, off) =>
+    forAll(tables) { case (n, c1, c2, c3, off) =>
       val base = spark.range(n.toLong).select(
         concat(lit("k"), pmod(hash($"id" * 7 + 1), lit(c1)).cast("string")).as("g"),
         pmod(hash($"id" * 11 + 3), lit(c2)).cast("int").as("h"),
+        pmod(hash($"id" * 19 + 11), lit(c3.toLong)).as("x"),
         (pmod(hash($"id" * 13 + 5), lit(1000)) + lit(off)).cast("long").as("v"),
         (pmod(hash($"id" * 17 + 7), lit(9973)).cast("double") / 7.0).as("d"))
         .cache()
       base.count()
-      operators.GroupKernel.encode(base, Seq("g", "h"))
+      operators.GroupKernel.encode(base, Seq("g", "h", "x"))
       val q = "(select {s: (sum v) a: (avg d) lo: (min v) hi: (max d) " +
-        "n: (count v) r: (- (max v) (min v)) from: t by: {g: g h: h}})"
+        "n: (count v) r: (- (max v) (min v)) from: t by: {g: g h: h x: x}})"
       def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("g", "h").collect().map(_.toSeq.map {
+        df.orderBy("g", "h", "x").collect().map(_.toSeq.map {
           case dd: Double => math.round(dd * 1e9) // tolerate merge-order ULPs
           case x => x
         }).toSeq
