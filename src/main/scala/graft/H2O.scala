@@ -160,11 +160,6 @@ object H2O {
       (pmod(hash($"id" * 17 + 7), lit(1000000)).cast("double") / 100).as(v))
     val x = j1("v1").cache(); x.count()
     val y = j1("v2").cache(); y.count()
-    // big⋈big equi-join on in-memory tables: a shuffled HASH join skips
-    // the two 1e7-row sorts a sort-merge join pays (the reference's ij
-    // is a hash join too, core/join.c); Catalyst only picks SHJ when
-    // preferSortMergeJoin is off
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     for ((name, q) <- Seq("ij" -> "(ij [id1 id2] x y)",
       "lj" -> "(lj [id1 id2] x y)")) {
       // best-of-reps like the group-bys: the round-11 "uniform 20% slip
@@ -181,7 +176,6 @@ object H2O {
       println(f"[h2o] $name $best%.1f ms (${ts.head._2} rows; reps " +
         ts.map(t => f"${t._1}%.0f").mkString(",") + ")")
     }
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     x.unpersist(); y.unpersist()
     }
 

@@ -4,9 +4,11 @@ import java.util.IdentityHashMap
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions.{approx_count_distinct, col, collect_set, count, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Dictionary-encoded group-by kernel.
   *
@@ -60,21 +62,6 @@ object GroupKernel extends Serializable {
     * above it the dense arrays stop fitting in cache, so codes map to
     * slots through a per-task [[SlotMap]]. */
   val MaxDense: Int = 1 << 20
-
-  /** Whether a (key-product, source-partitions) pair may merge on the
-    * DRIVER instead of the executor chunk merge. Both bounds are
-    * load-bearing and protect different sides:
-    *  - p ≤ 2^14 bounds the DECODED result the driver path ships in a
-    *    single task closure (a 1e5-group query sneaking through on a
-    *    low-partition scan re-opens the round-7 LocalRelation trap:
-    *    ~40 ms of closure deserialization per query);
-    *  - p·partitions ≤ 2^21 bounds the partials COLLECT (a
-    *    1000-executor scan with 100k partitions must not fan GBs of
-    *    partials into the driver). */
-  private[graft] def driverMergeEligible(p: Int, partitions: Int): Boolean =
-    p <= (1 << 14) &&
-      p.toLong * partitions <= (1L << 12) * 512 &&
-      partitions <= 512
 
   /** One columnar block per partition: name → Array[Int] (dict codes),
     * Array[Long] (integral values) or Array[Double] (floating values). */
@@ -807,49 +794,60 @@ object GroupKernel extends Serializable {
       }
     }.toArray.unzip
     val nPrims = primKind.length
+    // how decode writes each key: its dictionary holds UTF8String, Int,
+    // Long or Boolean values (the types encode admits)
+    val keyKind = keyArr.map(k => enc.keyTypes(k) match {
+      case StringType => 0; case IntegerType => 1; case LongType => 2
+      case BooleanType => 3
+    })
     // decode the occupied slots of a merged partial into output rows (key
-    // decode + post-agg slots); a dense slot i holds code base + i
+    // decode + post-agg slots); a dense slot i holds code base + i. Every
+    // row is written into ONE reused UnsafeRow: the scan over these rows
+    // projects each one before it asks for the next.
     def decodeSlots(merged: Partial, base: Long)
         : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
       // executor-side: resolve the broadcast once per range
       val dictsInternal: Array[Array[Any]] = {
         val m = bcDecode.value; keyArr.map(m)
       }
+      val writer = new UnsafeRowWriter(nKeys + nPrims)
       // one call per occupied slot: a method the JIT compiles after a few
       // hundred rows, not a loop body that waits for on-stack replacement
       def row(i: Int): org.apache.spark.sql.catalyst.InternalRow = {
+        writer.reset()
+        writer.zeroOutNullBytes()
         val n = merged.counts(i)
-        val vals = new Array[Any](nKeys + nPrims)
         var rem = if (merged.codes == null) base + i else merged.codes(i)
         var j = nKeys - 1
         while (j >= 0) {
-          vals(j) = dictsInternal(j)((rem % cardsArr(j)).toInt)
+          val v = dictsInternal(j)((rem % cardsArr(j)).toInt)
+          keyKind(j) match {
+            case 0 => writer.write(j, v.asInstanceOf[UTF8String])
+            case 1 => writer.write(j, v.asInstanceOf[Int])
+            case 2 => writer.write(j, v.asInstanceOf[Long])
+            case 3 => writer.write(j, v.asInstanceOf[Boolean])
+          }
           rem /= cardsArr(j)
           j -= 1
         }
         var q = 0
         while (q < nPrims) {
           val a = primAcc(q)
-          vals(nKeys + q) = primKind(q) match {
-            case ReadCount => n
-            case ReadAvgL => merged.accL(a)(i).toDouble / n
-            case ReadAvgD => merged.accD(a)(i) / n
-            case ReadL => merged.accL(a)(i)
-            case ReadInt => merged.accL(a)(i).toInt
-            case ReadD => merged.accD(a)(i)
+          val o = nKeys + q
+          primKind(q) match {
+            case ReadCount => writer.write(o, n)
+            case ReadAvgL => writer.write(o, merged.accL(a)(i).toDouble / n)
+            case ReadAvgD => writer.write(o, merged.accD(a)(i) / n)
+            case ReadL => writer.write(o, merged.accL(a)(i))
+            case ReadInt => writer.write(o, merged.accL(a)(i).toInt)
+            case ReadD => writer.write(o, merged.accD(a)(i))
           }
           q += 1
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+        writer.getRow
       }
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.catalyst.InternalRow]
-      var i = 0
-      while (i < merged.counts.length) {
-        if (merged.counts(i) > 0) rows += row(i)
-        i += 1
-      }
-      rows.iterator
+      Iterator.range(0, merged.counts.length)
+        .filter(merged.counts(_) > 0).map(row)
     }
     // hashed merge: the slots of every slice re-map into one SlotMap sized
     // to the slots received and fold in through pass 2's accumulate loops
@@ -872,35 +870,7 @@ object GroupKernel extends Serializable {
     }
     val nChunks = if (product >= (1 << 14)) 8 else 1
     val mergedRows =
-      if (dense && GroupKernel.driverMergeEligible(product.toInt, src.getNumPartitions)) {
-        // p ≤ 2^14 keeps the DECODED result small: the driver path
-        // ships result rows in one task closure, and a 1e5-group query
-        // sneaking under the product bound (few source partitions)
-        // re-opened the round-7 LocalRelation trap — its single-task
-        // stage paid ~40 ms of closure deserialization per query
-        // (measured: Q6 255 ms vs 140 via the executor merge).
-        // small dense space (the H2O Q1/Q2/Q4 shapes): the partials are
-        // a few KB-to-hundreds-of-KB each — collect and merge on the
-        // driver, decode locally, re-distribute the result rows as a
-        // single-partition RDD. Removes the 1-partition shuffle stage
-        // (its 32 map-output files + an extra scheduled stage cost more
-        // than the result ships for). The large-row LocalRelation trap
-        // (round 7) doesn't apply: rows enter as InternalRows, no
-        // encoder pass. The gate bounds the PRODUCT slots×partitions
-        // (≤ 2^21, the same worst-case driver pull as the original
-        // p ≤ 4096 × 512-partition gate — round 10 widened it so a
-        // 10k-group query on a 32-partition scan merges driver-side
-        // too): a 1000-executor scan with 100k partitions must NOT fan
-        // 10 GB of partials into the driver — past the gate the
-        // executor-side merge below runs.
-        val ps = partials.collect()
-        val rows =
-          if (ps.isEmpty) Array.empty[org.apache.spark.sql.catalyst.InternalRow]
-          else decodeSlots(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0).toArray
-        df.sparkSession.sparkContext.parallelize(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(rows), 1)
-      }
-      else if (nChunks == 1)
+      if (nChunks == 1)
         partials.repartition(1).mapPartitions { ps =>
           if (ps.isEmpty) Iterator.empty
           else decodeSlots(ps.reduce((a, b) => a.merge(b, opsL, opsD)), 0)
@@ -959,8 +929,8 @@ object GroupKernel extends Serializable {
             else decodeSlots(mergeHashed(it.map(_._2).toArray), 0)
           }
       }
-    // 1-partition results (driver merge, single-chunk executor merge)
-    // declare SinglePartition so the caller's count/collect aggregate
+    // 1-partition results (the single-chunk merge) declare
+    // SinglePartition so the caller's count/collect aggregate
     // plans exchange-free — one stage fewer per sub-second query
     val idf =
       if (mergedRows.getNumPartitions == 1)

@@ -37,8 +37,10 @@ case class AsofJoinNode(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans the engine's merge operators: the as-of join and the sliding
-  * window join ([[WindowJoinNode]]). */
+/** Plans the engine's join operators: the as-of join, the sliding window
+  * join ([[WindowJoinNode]]) and the hash equi-join ([[HashJoinNode]],
+  * whose keys are made byte-comparable here, as the optimizer normalizes
+  * Catalyst's own join keys before planning). */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinNode(l, r, lk, rk, lt, rt, tie, p) =>
@@ -46,6 +48,9 @@ object AsofJoinStrategy extends SparkStrategy {
     case WindowJoinNode(l, r, lk, rk, lt, rt, vs, as, ao, lo, hi, jt) =>
       WindowJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, vs, as, ao,
         lo, hi, jt) :: Nil
+    case HashJoinNode(l, r, lk, rk, jt) =>
+      HashJoinExec(planLater(l), planLater(r), lk.map(HashJoinNode.comparable),
+        rk.map(HashJoinNode.comparable), jt) :: Nil
     case _ => Nil
   }
 

@@ -20,6 +20,12 @@ object ColumnInternals {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `e` with its floating values normalized (-0.0 to 0.0, every NaN to
+    * one NaN), the way the optimizer normalizes join and window keys. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+      .normalize(e)
+
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
@@ -50,7 +56,7 @@ object ColumnInternals {
   /** Like [[internalDataFrame]] for a 1-partition RDD, DECLARING the
     * partitioning as SinglePartition (LogicalRDD carries it through to
     * the scan exec): a downstream global aggregate or sort then plans
-    * with NO exchange — for GroupKernel's driver-merged results this
+    * with NO exchange — for GroupKernel's results merged in one task this
     * removes a whole 1-task stage (+ its stage boundary) from every
     * sub-second query's count/collect job (measured: the Q1 action job
     * was 2 × ~10 ms 1-task stages; this folds them into one). */

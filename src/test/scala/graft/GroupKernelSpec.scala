@@ -321,18 +321,4 @@ class GroupKernelSpec extends SparkSpec
       Map("t" -> registered))
     assert(df.count() == 5L)
   }
-
-  test("driver-merge gate: BOTH bounds bind — big p stays executor-side " +
-      "even on low-partition scans (the LocalRelation-trap regression)") {
-    import graft.operators.GroupKernel.driverMergeEligible
-    assert(driverMergeEligible(100, 32))      // H2O Q1/Q4
-    assert(driverMergeEligible(10000, 32))    // H2O Q2 (round-10 widening)
-    assert(driverMergeEligible(16384, 128))   // at both bounds
-    assert(!driverMergeEligible(100000, 20))  // Q3/Q5/Q6 shape: product
-      // fits under 2^21 on a 20-partition scan, but shipping 1e5
-      // decoded rows in one closure is the regression this pins
-    assert(!driverMergeEligible(16385, 2))    // p cap alone
-    assert(!driverMergeEligible(4096, 513))   // partition cap alone
-    assert(!driverMergeEligible(10000, 500))  // product cap alone
-  }
 }

@@ -476,6 +476,71 @@ class OperatorsSpec extends SparkSpec {
     assert(got.length == 1 && got(0).getDouble(1) == 99.0)
   }
 
+  test("Rayfall ij runs as HashJoinExec: no broadcast, no Catalyst join, " +
+      "and building the DataFrame starts no job") {
+    import org.apache.spark.sql.execution.joins.{
+      BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val x = spark.range(200).select(($"id" % 50).as("id1"),
+      ($"id" % 3).as("id2"), $"id".cast("double").as("v1"))
+    val y = spark.range(100).select(($"id" % 50).as("id1"),
+      ($"id" % 3).as("id2"), $"id".cast("double").as("v2"))
+    // job starts reach a listener asynchronously but in order: a marker
+    // job run after the build bounds the jobs the build started
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (df, buildJobs) = try {
+      val built = rayfall.Rayfall.query("(ij [id1 id2] x y)",
+        Map("x" -> x, "y" -> y))
+      spark.sparkContext.setJobDescription("marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      var seen = List.empty[String]
+      while (!seen.contains("marker")) {
+        val d = started.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "the marker job's start never arrived")
+        seen ::= d
+      }
+      (built, seen.length - 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(buildJobs == 0, s"building the join started $buildJobs jobs")
+    val want = x.join(y, Seq("id1", "id2")).count()
+    assert(df.count() == want)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def has(f: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Any]) =
+      helper.collect(plan)(f).nonEmpty
+    assert(has { case j: graft.plans.HashJoinExec => j }, plan.toString)
+    assert(!has {
+      case p @ (_: BroadcastExchangeExec | _: BroadcastHashJoinExec |
+                _: ShuffledHashJoinExec | _: SortMergeJoinExec) => p
+    }, plan.toString)
+  }
+
+  test("join keys normalize floats as Catalyst does: -0.0 meets 0.0 and " +
+      "NaN meets NaN") {
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val l = Seq((0.0, "zero"), (-0.0, "negzero"), (Double.NaN, "nan"),
+      (1.5, "one")).toDF("k", "a")
+    val r = Seq((-0.0, 1L), (nan2, 2L), (2.5, 3L)).toDF("k", "b")
+    val inner = operators.Joins.innerJoinOverride(l, r, Seq("k"))
+      .collect().map(x => (x.getString(1), x.getLong(2))).toSet
+    assert(inner == Set(("zero", 1L), ("negzero", 1L), ("nan", 2L)))
+    assert(inner == l.join(r, Seq("k")).collect()
+      .map(x => (x.getString(1), x.getLong(2))).toSet)
+    val left = operators.Joins.leftJoinOverride(l, r, Seq("k"))
+      .collect().map(x => (x.getString(1), Option(x.get(2)))).toSet
+    assert(left == Set(("zero", Some(1L)), ("negzero", Some(1L)),
+      ("nan", Some(2L)), ("one", None)))
+  }
+
   test("upsert: source with subset of columns leaves missing cols from target") {
     val target = Seq((1L, "a", 10.0)).toDF("k", "name", "bal")
     val source = Seq((1L, 99.0)).toDF("k", "bal")

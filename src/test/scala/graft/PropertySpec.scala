@@ -317,6 +317,59 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("HashJoinExec == Catalyst join on random tables and key types") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    val key = Gen.frequency(1 -> Gen.const(Option.empty[Int]),
+      6 -> Gen.chooseNum(-2, 2).map(Option(_)))
+    // Gen.choose, not chooseNum: chooseNum draws its bounds (an empty
+    // side) far too often; the first two cases below empty one side each
+    val side = Gen.choose(1, 30).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(key, key)))
+    val gen = Gen.zip(side, side)
+    // (name, left key cast, right key cast): a key domain of -2..2 gives
+    // duplicate keys on both sides (negative ones: an int and a long -1
+    // differ in their bytes); every seventh key is null
+    val types: Seq[(String, Column => Column, Column => Column)] = Seq(
+      ("int", _.cast("int"), _.cast("int")),
+      ("long", _.cast("long"), _.cast("long")),
+      ("string", c => concat(lit("s"), c), c => concat(lit("s"), c)),
+      ("double", _ / 2.0, _ / 2.0),
+      ("date", date_add(lit("2024-01-01").cast("date"), _),
+        date_add(lit("2024-01-01").cast("date"), _)),
+      ("int vs long", _.cast("int"), _.cast("long")))
+    // every shuffle partition joins its own table: keep AQE from
+    // coalescing these small sides into one partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try types.zipWithIndex.foreach { case ((name, lCast, rCast), i) =>
+      val (ls0, rs0) = gen.pureApply(Gen.Parameters.default, Seed(7L + i))
+      val nKeys = 1 + i % 2
+      val ls = if (i == 0) Nil else ls0
+      val rs = if (i == 1) Nil else rs0
+      val keys = Seq("k1", "k2").take(nKeys)
+      def table(rows: List[(Option[Int], Option[Int])], cast: Column => Column,
+                v: String): DataFrame =
+        rows.zipWithIndex.map { case ((a, b), j) => (a, b, j.toLong) }
+          .toDF("k1", "k2", v)
+          .select(cast($"k1").as("k1"), cast($"k2").as("k2"), col(v))
+          .select((keys :+ v).map(col): _*)
+      val l = table(ls, lCast, "a")
+      val r = table(rs, rCast, "b")
+      for (how <- Seq("inner", "left")) {
+        val ours =
+          if (how == "inner") operators.Joins.innerJoinOverride(l, r, keys)
+          else operators.Joins.leftJoinOverride(l, r, keys)
+        val catalyst = l.join(r, keys.map(k => l(k) === r(k)).reduce(_ && _), how)
+          .select(keys.map(l(_)) :+ l("a") :+ r("b"): _*)
+        assert(ours.schema.map(_.dataType) == catalyst.schema.map(_.dataType),
+          s"$name $how")
+        assert(ours.exceptAll(catalyst).isEmpty &&
+          catalyst.exceptAll(ours).isEmpty,
+          s"$name $how, $nKeys keys, ${ls.length} x ${rs.length} rows")
+      }
+    } finally spark.conf.unset(coalesce)
+  }
+
   test("GroupKernel == Catalyst on random tables, keys, and agg mixes") {
     // key-3 lets some draws pass MaxDense (2^20 key cells; the seeds below
     // draw one at 16 × 16 × 7118), so both the dense and the hashed slot
