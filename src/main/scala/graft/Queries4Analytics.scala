@@ -906,7 +906,7 @@ private[graft] trait Queries4Analytics extends Queries3Curate {
   // ---------------------------------------------------------------- q36
   // Large⋈large equi-join (the H2O join shape, BASELINE.md inner-join):
   // both sides over the broadcast threshold → shuffled join on the key.
-  // Round-9 100× audit (graft.TimeJoin A/B at 60M⋈15M): the SHUFFLED
+  // Round-9 100× audit (an A/B at 60M⋈15M; README's q36 row): the SHUFFLED
   // HASH join is the stable winner (4.5 s vs sort-merge's 4.6-24 s —
   // SMJ pays two 15M-row sorts and spills erratically), and
   // pre-aggregating lineitem by orderkey before the join LOSES: the 15M-

@@ -27,6 +27,12 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   * cast). A null key matches nothing. Output row order is unspecified.
   * Unlike Catalyst's `Join`, the optimizer pushes no filter written above
   * this node below it, and infers no constraint through it.
+  *
+  * `operators.Joins` puts a cached side in as its keyed copy: the cached
+  * rows repartitioned by hash on that side's [[HashJoinNode.comparable]]
+  * keys and cached beside the source (at most one such copy per cached
+  * source, dropped with it), so the planner finds the side already
+  * clustered as [[HashJoinExec]] requires.
   */
 case class HashJoinNode(left: LogicalPlan, right: LogicalPlan,
                         leftKeys: Seq[Expression], rightKeys: Seq[Expression],
@@ -67,9 +73,12 @@ object HashJoinNode {
 }
 
 /** Plans [[HashJoinNode]]: both children clustered on their keys, so
-  * EnsureRequirements adds co-partitioned exchanges (or none, where a
-  * child is already laid out that way). Each partition loads its right
-  * rows into a [[HashJoinTable]] and streams its left rows through it. */
+  * EnsureRequirements adds co-partitioned exchanges, or none where a
+  * child is already laid out that way: a keyed copy of a cached side is
+  * an in-memory scan that reports its hash partitioning on exactly these
+  * keys, and two such children need no exchange at all. Each partition
+  * loads its right rows into a [[HashJoinTable]] and streams its left
+  * rows through it. */
 case class HashJoinExec(left: SparkPlan, right: SparkPlan,
                         leftKeys: Seq[Expression], rightKeys: Seq[Expression],
                         joinType: JoinType) extends BinaryExecNode {

@@ -26,6 +26,44 @@ object ColumnInternals {
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
       .normalize(e)
 
+  /** The entry of `spark`'s shared cache that serves `plan` (an analyzed
+    * plan), if one does: its builder, which only identifies the entry (as
+    * an object: builders of two entries can be equal), and its storage
+    * level. */
+  def cacheOf(spark: org.apache.spark.sql.SparkSession,
+              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[(AnyRef, org.apache.spark.storage.StorageLevel)] = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    s.sharedState.cacheManager.lookupCachedData(s, plan).map { cd =>
+      val b = cd.cachedRepresentation.cacheBuilder
+      (b, b.storageLevel)
+    }
+  }
+
+  /** The number of partitions `spark` shuffles into (AQE's initial
+    * number where it sets one), as EnsureRequirements reads it. */
+  def numShufflePartitions(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
+
+  /** Registers `plan` (analyzed) in the shared cache at `level`, as
+    * `Dataset.persist` does: nothing is computed until a query scans it. */
+  def cache(spark: org.apache.spark.sql.SparkSession,
+            plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+            level: org.apache.spark.storage.StorageLevel): Unit = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    s.sharedState.cacheManager.cacheQuery(s, plan, None, level)
+  }
+
+  /** Drops `plan`'s cache entry, as `Dataset.unpersist()` does. */
+  def uncache(spark: org.apache.spark.sql.SparkSession,
+              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Unit = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    s.sharedState.cacheManager.uncacheQuery(s, plan, cascade = false,
+      blocking = false)
+  }
+
   /** A DataFrame's analyzed logical plan. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

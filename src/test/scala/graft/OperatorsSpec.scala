@@ -524,6 +524,126 @@ class OperatorsSpec extends SparkSpec {
     }, plan.toString)
   }
 
+  /** The jobs `f` starts. Job starts reach a listener asynchronously but
+    * in order, so a marker job run after `f` bounds them. */
+  private def jobsOf(f: => Unit): Int = {
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      spark.sparkContext.setJobDescription("marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      var seen = List.empty[String]
+      while (!seen.contains("marker")) {
+        val d = started.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "the marker job's start never arrived")
+        seen ::= d
+      }
+      seen.length - 1
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def persistentRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("Rayfall ij on cached sides joins their keyed copies: the second " +
+      "call has no exchange below HashJoinExec and its count runs 2 jobs") {
+    val x = spark.range(4000).select(($"id" % 500).as("id1"),
+      ($"id" % 7).as("id2"), $"id".cast("double").as("v1")).cache()
+    val y = spark.range(2000).select(($"id" % 450).as("id1"),
+      ($"id" % 5).as("id2"), ($"id" * 3).cast("double").as("v2")).cache()
+    try {
+      x.count(); y.count()
+      def ij() = rayfall.Rayfall.query("(ij [id1 id2] x y)",
+        Map("x" -> x, "y" -> y))
+      val want = x.join(y, Seq("id1", "id2")).count()
+      val first = ij()
+      assert(first.count() == want)
+      val second = ij()
+      assert(jobsOf(assert(second.count() == want)) == 2)
+      assert(second.exceptAll(first).isEmpty && first.exceptAll(second).isEmpty)
+      assert(exchangesBelowJoin(second) == 0,
+        second.queryExecution.executedPlan.toString)
+    } finally { x.unpersist(blocking = true); y.unpersist(blocking = true) }
+  }
+
+  test("an uncached parquet side keeps its exchange and is read again by " +
+      "every join: it sees a file rewritten between two calls") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_join_src")
+      .toString
+    val l = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "a").cache()
+    try {
+      l.count()
+      Seq((1L, 10.0), (2L, 20.0)).toDF("k", "b").write.mode("overwrite")
+        .parquet(dir)
+      def ij() = operators.Joins.innerJoinOverride(l,
+        spark.read.parquet(dir), Seq("k"))
+      val before = persistentRdds
+      val first = ij()
+      assert(first.collect().map(r => (r.getLong(0), r.getDouble(2))).toSet ==
+        Set((1L, 10.0), (2L, 20.0)))
+      assert(exchangesBelowJoin(first) == 1,
+        first.queryExecution.executedPlan.toString)
+      Seq((2L, 21.0), (3L, 30.0)).toDF("k", "b").write.mode("overwrite")
+        .parquet(dir)
+      val second = ij()
+      assert(second.collect().map(r => (r.getLong(0), r.getDouble(2))).toSet ==
+        Set((2L, 21.0), (3L, 30.0)))
+      assert(exchangesBelowJoin(second) == 1,
+        second.queryExecution.executedPlan.toString)
+      // only the cached left side got a copy
+      assert((persistentRdds -- before).size == 1)
+    } finally {
+      l.unpersist(blocking = true)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a keyed copy lives with its source: one per source, replaced by " +
+      "a join on other keys, gone once the source is unpersisted") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def x = spark.range(3000).select(($"id" % 300).as("id1"),
+      ($"id" % 4).as("id2"), $"id".as("v1"))
+    val y = spark.range(1000).select(($"id" % 200).as("id1"),
+      ($"id" % 3).as("id2"), $"id".as("v2")).cache()
+    val cx = x.cache()
+    try {
+      cx.count(); y.count()
+      val base = persistentRdds
+      def ij(keys: String*) = operators.Joins.innerJoinOverride(cx, y, keys)
+      ij("id1", "id2").count()
+      val copies = persistentRdds -- base
+      assert(copies.size == 2, "one copy of each cached side")
+      ij("id1", "id2").count()
+      assert(persistentRdds -- base == copies, "the same keys reuse them")
+      assert(ij("id1").count() == cx.join(y, Seq("id1")).count())
+      val replaced = persistentRdds -- base
+      assert(replaced.size == 2 && (replaced & copies).isEmpty,
+        "other keys replace both copies")
+      cx.unpersist(blocking = true)
+      eventually(timeout(30.seconds)) {
+        assert((persistentRdds -- base).size == 1, "x's copy is freed")
+      }
+      // x cached again is a new source: its first join makes a new copy
+      val cx2 = x.cache()
+      assert(operators.Joins.innerJoinOverride(cx2, y, Seq("id1")).count() ==
+        cx2.join(y, Seq("id1")).count())
+      cx2.unpersist(blocking = true)
+      y.unpersist(blocking = true)
+      eventually(timeout(30.seconds)) {
+        assert((persistentRdds -- base).isEmpty, "every copy is freed")
+      }
+    } finally { cx.unpersist(); y.unpersist() }
+  }
+
   test("join keys normalize floats as Catalyst does: -0.0 meets 0.0 and " +
       "NaN meets NaN") {
     val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.RF
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators.{AsofJoin, Upsert}
 
 /** Property-based operator algebra (the FIXTURES.md §7 plan): division
@@ -317,8 +318,26 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("HashJoinExec == Catalyst join on random tables and key types") {
-    import org.apache.spark.sql.{Column, DataFrame}
+  private type KeyType = (String, Column => Column, Column => Column)
+
+  // (name, left key cast, right key cast): a key domain of -2..2 gives
+  // duplicate keys on both sides (negative ones: an int and a long -1
+  // differ in their bytes); every seventh key is null
+  private val keyTypes: Seq[KeyType] = Seq(
+    ("int", _.cast("int"), _.cast("int")),
+    ("long", _.cast("long"), _.cast("long")),
+    ("string", c => concat(lit("s"), c), c => concat(lit("s"), c)),
+    ("double", _ / 2.0, _ / 2.0),
+    ("date", date_add(lit("2024-01-01").cast("date"), _),
+      date_add(lit("2024-01-01").cast("date"), _)),
+    ("int vs long", _.cast("int"), _.cast("long")))
+
+  /** Our inner and left joins against Catalyst's on generated tables, one
+    * table pair per key type; the first two pairs have an empty side.
+    * With `cached`, both sides are cached and each join runs twice: the
+    * second call must join the keyed copies, with no exchange below
+    * HashJoinExec. */
+  private def joinParity(types: Seq[KeyType], cached: Boolean): Unit = {
     val key = Gen.frequency(1 -> Gen.const(Option.empty[Int]),
       6 -> Gen.chooseNum(-2, 2).map(Option(_)))
     // Gen.choose, not chooseNum: chooseNum draws its bounds (an empty
@@ -326,17 +345,6 @@ class PropertySpec extends SparkSpec {
     val side = Gen.choose(1, 30).flatMap(n =>
       Gen.listOfN(n, Gen.zip(key, key)))
     val gen = Gen.zip(side, side)
-    // (name, left key cast, right key cast): a key domain of -2..2 gives
-    // duplicate keys on both sides (negative ones: an int and a long -1
-    // differ in their bytes); every seventh key is null
-    val types: Seq[(String, Column => Column, Column => Column)] = Seq(
-      ("int", _.cast("int"), _.cast("int")),
-      ("long", _.cast("long"), _.cast("long")),
-      ("string", c => concat(lit("s"), c), c => concat(lit("s"), c)),
-      ("double", _ / 2.0, _ / 2.0),
-      ("date", date_add(lit("2024-01-01").cast("date"), _),
-        date_add(lit("2024-01-01").cast("date"), _)),
-      ("int vs long", _.cast("int"), _.cast("long")))
     // every shuffle partition joins its own table: keep AQE from
     // coalescing these small sides into one partition
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -348,26 +356,48 @@ class PropertySpec extends SparkSpec {
       val rs = if (i == 1) Nil else rs0
       val keys = Seq("k1", "k2").take(nKeys)
       def table(rows: List[(Option[Int], Option[Int])], cast: Column => Column,
-                v: String): DataFrame =
-        rows.zipWithIndex.map { case ((a, b), j) => (a, b, j.toLong) }
+                v: String): DataFrame = {
+        val t = rows.zipWithIndex.map { case ((a, b), j) => (a, b, j.toLong) }
           .toDF("k1", "k2", v)
           .select(cast($"k1").as("k1"), cast($"k2").as("k2"), col(v))
           .select((keys :+ v).map(col): _*)
+        if (cached) t.cache() else t
+      }
       val l = table(ls, lCast, "a")
       val r = table(rs, rCast, "b")
-      for (how <- Seq("inner", "left")) {
+      try for (how <- Seq("inner", "left"); call <- 1 to (if (cached) 2 else 1)) {
         val ours =
           if (how == "inner") operators.Joins.innerJoinOverride(l, r, keys)
           else operators.Joins.leftJoinOverride(l, r, keys)
         val catalyst = l.join(r, keys.map(k => l(k) === r(k)).reduce(_ && _), how)
           .select(keys.map(l(_)) :+ l("a") :+ r("b"): _*)
+        val what = s"$name $how call $call, $nKeys keys, " +
+          s"${ls.length} x ${rs.length} rows"
         assert(ours.schema.map(_.dataType) == catalyst.schema.map(_.dataType),
-          s"$name $how")
+          what)
         assert(ours.exceptAll(catalyst).isEmpty &&
-          catalyst.exceptAll(ours).isEmpty,
-          s"$name $how, $nKeys keys, ${ls.length} x ${rs.length} rows")
-      }
+          catalyst.exceptAll(ours).isEmpty, what)
+        if (call == 2) {
+          ours.collect()
+          assert(exchangesBelowJoin(ours) == 0,
+            s"$what\n${ours.queryExecution.executedPlan}")
+        }
+      } finally if (cached) { l.unpersist(blocking = true); r.unpersist(blocking = true) }
     } finally spark.conf.unset(coalesce)
+  }
+
+  test("HashJoinExec == Catalyst join on random tables and key types") {
+    joinParity(keyTypes, cached = false)
+  }
+
+  test("HashJoinExec == Catalyst join on random cached tables, the second " +
+      "call through their keyed copies (NaN and -0.0 keys included)") {
+    // -0.0 meets 0.0, and two NaNs of different bits meet
+    def odd(nan: Double)(c: Column): Column =
+      when(c === 2, lit(nan)).when(c === -2, lit(-0.0)).otherwise(c / 2.0)
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    joinParity(keyTypes :+ (("double NaN -0.0", odd(Double.NaN) _,
+      odd(nan2) _)), cached = true)
   }
 
   test("GroupKernel == Catalyst on random tables, keys, and agg mixes") {

@@ -1,30 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.SkewJoin
 
 class SkewApproxSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted join result equals the plain join (skew spread, same rows)") {
-    val left = Seq((1L, "a"), (1L, "b"), (1L, "c"), (2L, "d"))
-      .toDF("k", "lv")
-    val right = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).orderBy($"k", $"lv")
-      .collect().toSeq
-    val salted = SkewJoin.saltedJoin(left, right, Seq("k"), salt = 4)
-      .orderBy($"k", $"lv").collect().toSeq
-    assert(salted == plain)
-  }
-
-  test("salted left join preserves unmatched left rows exactly once") {
-    val left = Seq((1L, "a"), (9L, "x")).toDF("k", "lv")
-    val right = Seq((1L, 10.0)).toDF("k", "rv")
-    val got = SkewJoin.saltedJoin(left, right, Seq("k"), 3, "left")
-      .orderBy($"k").collect()
-    assert(got.length == 2)
-    assert(got(1).isNullAt(2))
-  }
 
   test("deterministic HLL: estimate within 10% of exact distinct in the " +
       "raw regime; registers merge by MAX (shard-parallel); census " +

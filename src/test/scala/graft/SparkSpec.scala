@@ -1,12 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
+
+  /** The shuffle exchanges below the HashJoinExecs of `df`'s executed
+    * plan (there must be one). */
+  def exchangesBelowJoin(df: DataFrame): Int = {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val joins = helper.collect(df.queryExecution.executedPlan) {
+      case j: graft.plans.HashJoinExec => j }
+    assert(joins.nonEmpty, df.queryExecution.executedPlan.toString)
+    joins.map(helper.collect(_) { case e: ShuffleExchangeLike => e }.length)
+      .sum
+  }
 }
 
 object SparkSpec {
