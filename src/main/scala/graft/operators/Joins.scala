@@ -4,10 +4,10 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Attribute, AttributeMap, EqualTo, Expression, Literal}
+  Alias, Attribute, AttributeMap, EqualTo, Expression, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{
-  LocalRelation, LogicalPlan, Project, RepartitionByExpression}
+  LocalRelation, LogicalPlan, Project, RepartitionByExpression, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnInternals
 import graft.StringToColumn
@@ -35,10 +35,10 @@ import graft.plans.HashJoinNode
   * a keyed copy ([[KeyedCopies]]): the cached rows hash-partitioned once
   * on this join's keys and cached at the source's storage level, so the
   * planner finds that side laid out as the join needs it and adds no
-  * exchange, from the second join on the same keys onwards. The copy is
-  * computed by the first join that scans it (building the DataFrame
-  * starts no job) and costs at most one more cached copy of each cached
-  * source. */
+  * exchange. The copy is built by the first join that scans it, as part
+  * of that join's own job (building the DataFrame starts no job), and
+  * costs at most one more cached copy of each cached source; a copy a
+  * window join sorted on the same keys serves as well. */
 object Joins {
 
   def leftJoinOverride(left: DataFrame, right: DataFrame,
@@ -73,8 +73,9 @@ object Joins {
     val rSrcKeys = rKeys.map(_.transform {
       case a: Attribute => unalias.getOrElse(a, a) })
     val joined = ColumnInternals.ofRows(spark, HashJoinNode(
-      KeyedCopies.keyed(spark, lSrc, lKeys),
-      Project(rCols, KeyedCopies.keyed(spark, rSrc, rSrcKeys)),
+      KeyedCopies.keyed(spark, lSrc, lKeys.map(HashJoinNode.comparable)),
+      Project(rCols, KeyedCopies.keyed(spark, rSrc,
+        rSrcKeys.map(HashJoinNode.comparable))),
       lKeys, rKeys, how))
     joined.select(
       keys.map(col) ++
@@ -115,49 +116,88 @@ object Joins {
 
 /** The keyed copies of cached join sides, at most one per cached source.
   *
-  * A copy is its source's analyzed plan repartitioned by hash on the
-  * keys as [[graft.plans.HashJoinExec]] requires them for that side (the
-  * [[HashJoinNode.comparable]] forms, coercion casts included) into
-  * `numShufflePartitions` partitions, and registered in the shared cache
-  * at the source's storage level. A cached scan reports the partitioning
-  * of the plan it cached and a projection carries it through its
-  * aliases, so EnsureRequirements finds two such sides co-partitioned.
-  * Two cached sides whose plans are the same result share one cache
-  * entry, and so one copy.
+  * A copy is a *layout* of a side: the side's analyzed plan repartitioned
+  * by hash on partition expressions into `numShufflePartitions`
+  * partitions and, when a join asks for one, sorted within each
+  * partition. [[graft.plans.HashJoinExec]] asks for its side's keys in
+  * their [[HashJoinNode.comparable]] forms and no order;
+  * [[graft.plans.WindowJoinExec]] asks for its typed keys and the order
+  * (keys, ts). The side is a cached source or a view of one (a window
+  * join projects its cast left keys over the source). The copy is
+  * registered in the shared cache at the source's storage level and
+  * planned without adaptive execution, so its scan reports the
+  * partitioning and ordering of the plan it caches from the first join
+  * on, and a projection carries both through its aliases:
+  * EnsureRequirements finds such sides laid out as the join needs them
+  * and adds no exchange and no sort. Two cached sides whose plans are the
+  * same result share one cache entry, and so one copy.
   *
-  * A copy lives as long as its source's cache entry: a join of the same
-  * source on other keys replaces it, and when the source is unpersisted
-  * or the cache is cleared the copy is dropped (at the next join, or when
-  * the listener sees the source's blocks go). The registry is keyed by
-  * the identity of the source's cache builder: a source cached again is
-  * a new builder, so it never gets a copy of the old one. */
+  * A request is served by the source's copy when it is of the same side
+  * on the same partition expressions and its order is a prefix of the
+  * copy's (a hash join on `k` reuses the copy a window join on (`k`, ts)
+  * made); any other request replaces the copy. A copy lives as long as
+  * its source's cache entry: when the source is unpersisted or the cache
+  * is cleared the copy is dropped (at the next join, or when the listener
+  * sees the source's blocks go). The registry is keyed by the identity of
+  * the source's cache builder: a source cached again is a new builder, so
+  * it never gets a copy of the old one. */
 private[operators] object KeyedCopies {
   private final case class Copy(spark: SparkSession, source: LogicalPlan,
+                                side: LogicalPlan, order: Seq[SortOrder],
                                 plan: LogicalPlan)
 
   private val copies = new java.util.IdentityHashMap[AnyRef, Copy]
   @volatile private var listening: SparkContext = _
 
-  /** `side`, or its keyed copy on `keys` when `side` is cached. Registers
-    * (or replaces) the copy; computes nothing. */
-  def keyed(spark: SparkSession, side: LogicalPlan,
-            keys: Seq[Expression]): LogicalPlan =
-    ColumnInternals.cacheOf(spark, side) match {
-      case None => side
-      case Some((builder, level)) =>
-        val plan = RepartitionByExpression(keys.map(HashJoinNode.comparable),
-          side, Some(ColumnInternals.numShufflePartitions(spark)))
+  /** `view(source)`, or its copy hash-partitioned on `keys` (expressions
+    * over that view's output) and sorted by `order` within each partition
+    * when `source` is cached and there are keys. Registers (or replaces)
+    * the copy; computes nothing. */
+  def keyed(spark: SparkSession, source: LogicalPlan, keys: Seq[Expression],
+            order: Seq[SortOrder] = Nil,
+            view: LogicalPlan => LogicalPlan = identity): LogicalPlan = {
+    val side = view(source)
+    ColumnInternals.cacheOf(spark, source) match {
+      case Some((builder, level)) if keys.nonEmpty =>
+        def laid(o: Seq[SortOrder]): LogicalPlan = {
+          val parts = RepartitionByExpression(keys, side,
+            Some(ColumnInternals.numShufflePartitions(spark)))
+          if (o.isEmpty) parts else Sort(o, global = false, parts)
+        }
         listen(spark.sparkContext)
         synchronized {
           sweep()
-          if (ColumnInternals.cacheOf(spark, plan).isEmpty) {
-            Option(copies.remove(builder)).foreach(c =>
-              ColumnInternals.uncache(c.spark, c.plan))
-            ColumnInternals.cache(spark, plan, level)
-            copies.put(builder, Copy(spark, side, plan))
-          }
+          Option(copies.get(builder)).flatMap(serving(_, side, order))
+            .map(laid).filter(ColumnInternals.cacheOf(spark, _).isDefined)
+            .getOrElse {
+              val plan = laid(order)
+              if (ColumnInternals.cacheOf(spark, plan).isEmpty) {
+                Option(copies.remove(builder)).foreach(c =>
+                  ColumnInternals.uncache(c.spark, c.plan))
+                ColumnInternals.cache(spark, plan, level)
+                copies.put(builder, Copy(spark, source, side, order, plan))
+              }
+              plan
+            }
         }
-        plan
+      case _ => side
+    }
+  }
+
+  /** `c`'s order over `side`'s output, when `order` is a prefix of it. The
+    * caller's cache lookup then checks that `c` copied the same side on
+    * the same partition expressions. */
+  private def serving(c: Copy, side: LogicalPlan,
+                      order: Seq[SortOrder]): Option[Seq[SortOrder]] =
+    if (c.side.output.length != side.output.length) None
+    else {
+      val to = AttributeMap(c.side.output.zip(side.output))
+      val full = c.order.map(_.transform {
+        case a: Attribute => to.getOrElse(a, a) }.asInstanceOf[SortOrder])
+      if (order.length <= full.length &&
+          order.zip(full).forall { case (a, b) => a.semanticEquals(b) })
+        Some(full)
+      else None
     }
 
   /** Uncaches every copy whose source is no longer cached, and forgets

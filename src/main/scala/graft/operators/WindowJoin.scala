@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{
+  Alias, Ascending, AttributeReference, Cast, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnInternals
 import org.apache.spark.sql.types._
@@ -120,14 +121,22 @@ object WindowJoin {
     * Scale shape: one merge exec (`plans.WindowJoinExec`) whose children
     * are clustered on the keys and sorted by (keys, ts), so the planner
     * shuffles and sorts each side once — or not at all when a side is
-    * already bucketed that way. A partition is read in one pass over
-    * `InternalRow`s: one key's right rows are held as primitive columns
-    * while that key's left rows stream through the kernel. A hot key is
-    * processed by one task, linearly — the reference's per-key contract.
-    * Building the DataFrame starts no job. jtype 1 (`window-join1`, the
-    * default) aggregates inclusive `[lo, hi]`; jtype 0 (`window-join`)
-    * adds the prevailing row — the last right row with ts <= lo
-    * (`core/aggr.c:143-151`).
+    * already laid out that way. A cached side is laid out that way from
+    * the first call on: it goes in as its keyed copy ([[KeyedCopies]]),
+    * the cached rows hash-partitioned on the keys and sorted by
+    * (keys, ts) once, by the first call's own jobs, and cached beside the
+    * source (the right copy under the projection to the kernel's
+    * columns, a cast left key as a projection over the source), so later
+    * calls on unchanged sides run with no exchange and no sort. An
+    * uncached side is shuffled and sorted by every call. A copy is
+    * shared with `ij`/`lj` on the same keys. A partition is read
+    * in one pass over `InternalRow`s: one key's right rows are held as
+    * primitive columns while that key's left rows stream through the
+    * kernel. A hot key is processed by one task, linearly — the
+    * reference's per-key contract. Building the DataFrame starts no job.
+    * jtype 1 (`window-join1`, the default) aggregates inclusive
+    * `[lo, hi]`; jtype 0 (`window-join`) adds the prevailing row — the
+    * last right row with ts <= lo (`core/aggr.c:143-151`).
     *
     * Keys match by typed equality, as in [[windowJoin]]: where the two
     * sides' types of a key differ, both are cast to their wider common
@@ -164,8 +173,9 @@ object WindowJoin {
     // copy, so the left columns themselves come out unchanged
     val lKeys = keys.indices.map(i =>
       if (left.schema(keys(i)).dataType == keyTypes(i)) keys(i) else s"__lk$i")
-    val lPre = keys.indices.filter(i => lKeys(i) != keys(i)).foldLeft(left)(
-      (df, i) => df.withColumn(lKeys(i), col(keys(i)).cast(keyTypes(i))))
+    val casts = keys.indices.filter(i => lKeys(i) != keys(i))
+    val lPre = if (casts.isEmpty) left else left.withColumns(casts.map(i =>
+      lKeys(i) -> col(keys(i)).cast(keyTypes(i))).toMap)
     // every right column is aliased (fresh exprIds): a custom binary node
     // gets no DeduplicateRelations, so a self-join would otherwise carry
     // the same attribute ids on both children
@@ -188,8 +198,26 @@ object WindowJoin {
       }
       AttributeReference(a.as, t, nullable = true)()
     }
-    val node = graft.plans.WindowJoinNode(lPlan, rPlan,
-      lKeys.map(attr(lPlan, _)), keys.indices.map(i => attr(rPlan, s"__rk$i")),
+    // cached sides go in as keyed copies laid out as WindowJoinExec
+    // requires (see the scaladoc)
+    val lKeyAttrs = lKeys.map(attr(lPlan, _))
+    val lOrder = (lKeyAttrs :+ attr(lPlan, ts)).map(SortOrder(_, Ascending))
+    val lSide = lPlan match {
+      case Project(list, src) if lPre ne left =>
+        KeyedCopies.keyed(spark, src, lKeyAttrs, lOrder, Project(list, _))
+      case p => KeyedCopies.keyed(spark, p, lKeyAttrs, lOrder)
+    }
+    val Project(rList, rSrc) = rPlan: @unchecked
+    // __rk*, then __rts, over the source's own columns; a cast to the
+    // column's own type is dropped, as the optimizer drops it
+    val rExprs = rList.take(keys.length + 1).map {
+      case Alias(c: Cast, _) if c.child.dataType == c.dataType => c.child
+      case Alias(c, _) => c
+    }
+    val rSide = Project(rList, KeyedCopies.keyed(spark, rSrc, rExprs.init,
+      rExprs.map(SortOrder(_, Ascending))))
+    val node = graft.plans.WindowJoinNode(lSide, rSide,
+      lKeyAttrs, keys.indices.map(i => attr(rPlan, s"__rk$i")),
       attr(lPlan, ts), attr(rPlan, "__rts"),
       values.indices.map(j => attr(rPlan, s"__rv$j")),
       aggs.map(a => graft.plans.SlidingAgg(a.op, values.indexOf(a.col))),

@@ -38,7 +38,9 @@ case class WindowJoinNode(left: LogicalPlan, right: LogicalPlan,
 /** Both children clustered on the keys and sorted by (keys, ts), merged
   * per partition in one pass by [[WindowMerge]]. EnsureRequirements adds
   * the exchanges and sorts only where a child is not already laid out
-  * that way. */
+  * that way: a cached side's keyed copy is an in-memory scan that reports
+  * hash partitioning on these keys and this order, so two such children
+  * need neither. */
 case class WindowJoinExec(left: SparkPlan, right: SparkPlan,
                           leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
                           leftTs: Attribute, rightTs: Attribute,

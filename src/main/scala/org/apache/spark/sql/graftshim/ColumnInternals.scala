@@ -47,12 +47,26 @@ object ColumnInternals {
       .sessionState.conf.numShufflePartitions
 
   /** Registers `plan` (analyzed) in the shared cache at `level`, as
-    * `Dataset.persist` does: nothing is computed until a query scans it. */
+    * `Dataset.persist` does: nothing is computed until a query scans it.
+    * The cached plan is planned without adaptive execution. Its scan then
+    * reports the plan's partitioning and ordering before it is built (an
+    * adaptive plan reports them only once it has run), and a query that
+    * scans two such entries builds them in two concurrent jobs (an
+    * adaptive plan runs its shuffle on the thread that starts the build,
+    * so the second entry waited for the first one's shuffle). */
   def cache(spark: org.apache.spark.sql.SparkSession,
             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
             level: org.apache.spark.storage.StorageLevel): Unit = {
+    import org.apache.spark.sql.internal.SQLConf
     val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    s.sharedState.cacheManager.cacheQuery(s, plan, None, level)
+    // the configs the cache manager turns off itself, plus adaptive
+    // execution: the cache manager uses a session with all of them off
+    // as it is
+    val planner = org.apache.spark.sql.classic.SparkSession
+      .getOrCloneSessionWithConfigsOff(s, Seq(
+        SQLConf.ADAPTIVE_EXECUTION_ENABLED, SQLConf.AUTO_BUCKETED_SCAN_ENABLED,
+        SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+    s.sharedState.cacheManager.cacheQuery(planner, plan, None, level)
   }
 
   /** Drops `plan`'s cache entry, as `Dataset.unpersist()` does. */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{AsofJoin, Quantiles, Upsert, WindowJoin}
 
@@ -375,20 +376,101 @@ class OperatorsSpec extends SparkSpec {
       .collectFirst { case a: IllegalArgumentException => a }
       .getOrElse(fail(s"no IllegalArgumentException in $e"))
 
+  /** `f` on `l` and `r` (call 0), then on both cached, twice: call 1
+    * builds their keyed copies, call 2 reads them. */
+  private def uncachedAndCached(l: DataFrame, r: DataFrame)(
+      f: (DataFrame, DataFrame, Int) => Unit): Unit = {
+    f(l, r, 0)
+    val (lc, rc) = (l.cache(), r.cache())
+    try { lc.count(); rc.count(); f(lc, rc, 1); f(lc, rc, 2) }
+    finally { lc.unpersist(blocking = true); rc.unpersist(blocking = true) }
+  }
+
   test("sliding window join throws on a null left ts") {
+    // a cached side's copy sorts the null ts first within its key
     val l = Seq((1L, "a", Some(100L)), (2L, "a", None)).toDF("id", "k", "ts")
     val r = Seq(("a", 90L, 5L)).toDF("k", "ts", "v")
-    val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r, Seq("k"),
-      "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n"))).collect())
-    assert(argumentError(e).getMessage.contains("null ts in the left input"))
+    uncachedAndCached(l, r) { (l, r, _) =>
+      val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r,
+        Seq("k"), "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n")))
+        .collect())
+      assert(argumentError(e).getMessage.contains("null ts in the left input"))
+    }
   }
 
   test("sliding window join throws on a null right ts, even off every left key") {
     val l = Seq((1L, "a", 100L)).toDF("id", "k", "ts")
     val r = Seq(("a", Some(90L), 5L), ("z", None, 6L)).toDF("k", "ts", "v")
-    val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r, Seq("k"),
-      "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n"))).collect())
-    assert(argumentError(e).getMessage.contains("null ts in the right input"))
+    uncachedAndCached(l, r) { (l, r, _) =>
+      val e = intercept[Exception](WindowJoin.windowJoinSliding(l, r,
+        Seq("k"), "ts", -50L, 50L, Seq(WindowJoin.Agg("count", "v", "n")))
+        .collect())
+      assert(argumentError(e).getMessage.contains("null ts in the right input"))
+    }
+  }
+
+  /** Asserts that `wj` on cached sides reads their keyed copies as they
+    * are: no exchange and no sort below WindowJoinExec, also before the
+    * first call has built the copies (their layout is known when they are
+    * registered); once built (call 2 of [[uncachedAndCached]]), a count
+    * runs 2 jobs (the merge, and the final aggregate after its
+    * one-row-per-partition shuffle). */
+  private def readsCopies(what: String, rows: Int, call: Int)(
+      wj: => DataFrame): Unit = {
+    val df = wj
+    assert(exchangesAndSortsBelowWindowJoin(df) == 0,
+      s"$what, call $call\n${df.queryExecution.executedPlan}")
+    if (call == 2) assert(jobsOf(assert(wj.count() == rows)) == 2, what)
+  }
+
+  test("sliding window join on cached sides reads their sorted keyed " +
+      "copies: no exchange and no sort below WindowJoinExec from the " +
+      "first call on, a count of built copies runs 2 jobs, and the result " +
+      "equals the uncached call") {
+    val rnd = new scala.util.Random(11)
+    val l = (0 until 400).map(i =>
+      (i.toLong, rnd.nextInt(12), rnd.nextInt(2000).toLong))
+      .toDF("id", "k", "ts")
+    val r = (0 until 600).map(_ =>
+      (rnd.nextInt(12), rnd.nextInt(2000).toLong, rnd.nextInt(100).toLong))
+      .toDF("k", "ts", "v")
+    val aggs = Seq(WindowJoin.Agg("min", "v", "mn"),
+      WindowJoin.Agg("max", "v", "mx"), WindowJoin.Agg("count", "v", "n"))
+    // same key types; an int left key against a long right key (the left
+    // copy is of the cast key projected over the source); and the reverse
+    // (the right copy is partitioned and sorted on the cast key)
+    for ((lk, rk) <- Seq(("int", "int"), ("int", "long"), ("long", "int"));
+         jt <- Seq(0, 1)) {
+      val what = s"$lk vs $rk keys, jtype $jt"
+      def wj(a: DataFrame, b: DataFrame) = WindowJoin.windowJoinSliding(
+        a, b, Seq("k"), "ts", -50L, 50L, aggs, jt)
+      val (lt, rt) = (l.withColumn("k", $"k".cast(lk)),
+        r.withColumn("k", $"k".cast(rk)))
+      val want = wj(lt, rt).collect().toSet
+      assert(want.size == 400)
+      uncachedAndCached(lt, rt) { (a, b, call) =>
+        if (call > 0) readsCopies(what, 400, call)(wj(a, b))
+        assert(wj(a, b).collect().toSet == want, s"$what, call $call")
+      }
+    }
+  }
+
+  test("Rayfall window-join over cached tables reads their sorted keyed " +
+      "copies") {
+    val l = (0 until 200).map(i => (i % 7L, i * 10L, i.toLong))
+      .toDF("k", "ts", "price")
+    val r = (0 until 300).map(i => (i % 5L, i * 7L, (i * 13 % 100).toLong))
+      .toDF("k", "ts", "v")
+    def wj(a: DataFrame, b: DataFrame) = rayfall.Rayfall.script(spark,
+      "(set intervals (map-left + [-30 30] (at l 'ts)))" +
+        "(window-join [k ts] intervals l r {n: (count v) mn: (min v)})",
+      Map("l" -> a, "r" -> b))
+    val want = wj(l, r).collect().toSet
+    assert(want.size == 200)
+    uncachedAndCached(l, r) { (a, b, call) =>
+      if (call > 0) readsCopies("window-join", 200, call)(wj(a, b))
+      assert(wj(a, b).collect().toSet == want, s"call $call")
+    }
   }
 
   test("sliding window join matches an int key against a long key") {
@@ -638,6 +720,31 @@ class OperatorsSpec extends SparkSpec {
         cx2.join(y, Seq("id1")).count())
       cx2.unpersist(blocking = true)
       y.unpersist(blocking = true)
+      eventually(timeout(30.seconds)) {
+        assert((persistentRdds -- base).isEmpty, "every copy is freed")
+      }
+      // a window join on (id1, ts) copies each side sorted; a hash join on
+      // id1 is served by those copies and adds none
+      val t = spark.range(500).select(($"id" % 40).as("id1"),
+        ($"id" * 7 % 1000).as("ts")).cache()
+      val q = spark.range(1500).select(($"id" % 50).as("id1"),
+        ($"id" * 3 % 1000).as("ts"), $"id".as("v")).cache()
+      t.count(); q.count()
+      val before = persistentRdds
+      assert(WindowJoin.windowJoinSliding(t, q, Seq("id1"), "ts", -20L, 20L,
+        Seq(WindowJoin.Agg("count", "v", "n"))).count() == 500)
+      val sorted = persistentRdds -- before
+      assert(sorted.size == 2, "one sorted copy of each cached side")
+      val hashed = operators.Joins.innerJoinOverride(t, q, Seq("id1"))
+      assert(hashed.count() == t.join(q, Seq("id1")).count())
+      assert(persistentRdds -- before == sorted, "the hash join reuses them")
+      assert(exchangesBelowJoin(hashed) == 0,
+        hashed.queryExecution.executedPlan.toString)
+      q.unpersist(blocking = true)
+      eventually(timeout(30.seconds)) {
+        assert((persistentRdds -- before).size == 1, "q's copy is freed")
+      }
+      t.unpersist(blocking = true)
       eventually(timeout(30.seconds)) {
         assert((persistentRdds -- base).isEmpty, "every copy is freed")
       }

@@ -143,7 +143,11 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("window-join jtype 0/1 match the reference index model on random data") {
+  /** The sliding window join against the reference's aggregation kernel.
+    * With `cached`, both sides are cached and each case runs twice: the
+    * second call must read their sorted keyed copies, with no exchange
+    * and no sort below WindowJoinExec. */
+  private def windowJoinModel(cached: Boolean): Unit = {
     // independent oracle: the reference's aggregation kernel verbatim
     // (core/aggr.c:39-68,133-158) — li = indexr_bin(lo) (jtype 0) or
     // indexl_bin(lo) (jtype 1), ri = indexr_bin(hi), aggregate li..ri,
@@ -176,36 +180,51 @@ class PropertySpec extends SparkSpec {
       // may pick different physical duplicates as the prevailing row
       val rs = rs0.distinctBy(x => (x._1, x._2))
       whenever(ls.nonEmpty && rs.nonEmpty) {
-        val l = ls.zipWithIndex.map { case (((k, k2), ts), i) =>
+        val l0 = ls.zipWithIndex.map { case (((k, k2), ts), i) =>
           (i.toLong, k, k2, ts) }.toDF("id", "k", "k2", "ts")
-        val r = rs.map { case ((k, k2), ts, v) => (k, k2, ts, v) }
+        val r0 = rs.map { case ((k, k2), ts, v) => (k, k2, ts, v) }
           .toDF("k", "k2", "ts", "v")
+        val (l, r) = if (cached) (l0.cache(), r0.cache()) else (l0, r0)
         val byKey = rs.filter { case ((k, k2), _, _) =>
           k.isDefined && k2.isDefined }.groupBy(_._1).map { case (k, xs) =>
           val sorted = xs.sortBy(_._2)
           k -> (sorted.map(_._2).toVector, sorted.map(_._3).toVector)
         }
-        for (jt <- Seq(0, 1)) {
-          val got = operators.WindowJoin.windowJoinSliding(l, r,
+        try for (jt <- Seq(0, 1); call <- 1 to (if (cached) 2 else 1)) {
+          val df = operators.WindowJoin.windowJoinSliding(l, r,
             Seq("k", "k2"), "ts", -25L, 25L,
             Seq(operators.WindowJoin.Agg("count", "v", "n"),
               operators.WindowJoin.Agg("min", "v", "mn")), jtype = jt)
-            .collect().map { x =>
-              val mn = Option(x.getAs[java.lang.Long](5)).map(_.longValue)
-              ((Option(x.getString(1)), Option(x.getString(2))), x.getLong(3),
-                if (x.isNullAt(4)) None else Some((x.getLong(4), mn)))
-            }
+          val got = df.collect().map { x =>
+            val mn = Option(x.getAs[java.lang.Long](5)).map(_.longValue)
+            ((Option(x.getString(1)), Option(x.getString(2))), x.getLong(3),
+              if (x.isNullAt(4)) None else Some((x.getLong(4), mn)))
+          }
           assert(got.length == ls.length)
           got.foreach { case (k, ts, res) =>
             val (rts, rvs) = byKey.getOrElse(k,
               (Vector.empty[Long], Vector.empty[Option[Long]]))
             val want = model(rts, rvs, ts - 25L, ts + 25L, jt)
-            assert(res == want, s"jt=$jt k=$k ts=$ts got=$res want=$want " +
-              s"rts=$rts")
+            assert(res == want, s"jt=$jt call=$call k=$k ts=$ts got=$res " +
+              s"want=$want rts=$rts")
           }
+          if (call == 2)
+            assert(exchangesAndSortsBelowWindowJoin(df) == 0,
+              s"jt=$jt\n${df.queryExecution.executedPlan}")
+        } finally if (cached) {
+          l.unpersist(blocking = true); r.unpersist(blocking = true)
         }
       }
     }
+  }
+
+  test("window-join jtype 0/1 match the reference index model on random data") {
+    windowJoinModel(cached = false)
+  }
+
+  test("window-join jtype 0/1 match the reference index model on random " +
+      "cached data, the second call through sorted keyed copies") {
+    windowJoinModel(cached = true)
   }
 
   test("upsert: output keys = target keys ∪ source keys, each exactly once") {

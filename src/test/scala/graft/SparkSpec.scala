@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +13,23 @@ trait SparkSpec extends AnyFunSuite {
 
   /** The shuffle exchanges below the HashJoinExecs of `df`'s executed
     * plan (there must be one). */
-  def exchangesBelowJoin(df: DataFrame): Int = {
+  def exchangesBelowJoin(df: DataFrame): Int =
+    below(df, _.isInstanceOf[graft.plans.HashJoinExec],
+      _.isInstanceOf[ShuffleExchangeLike])
+
+  /** The shuffle exchanges and sorts below the WindowJoinExecs of `df`'s
+    * executed plan (there must be one). */
+  def exchangesAndSortsBelowWindowJoin(df: DataFrame): Int =
+    below(df, _.isInstanceOf[graft.plans.WindowJoinExec], p =>
+      p.isInstanceOf[ShuffleExchangeLike] || p.isInstanceOf[SortExec])
+
+  private def below(df: DataFrame, join: SparkPlan => Boolean,
+                    counted: SparkPlan => Boolean): Int = {
     val helper = new AdaptiveSparkPlanHelper {}
     val joins = helper.collect(df.queryExecution.executedPlan) {
-      case j: graft.plans.HashJoinExec => j }
+      case j if join(j) => j }
     assert(joins.nonEmpty, df.queryExecution.executedPlan.toString)
-    joins.map(helper.collect(_) { case e: ShuffleExchangeLike => e }.length)
-      .sum
+    joins.map(helper.collect(_) { case p if counted(p) => p }.length).sum
   }
 }
 
